@@ -399,7 +399,7 @@ object MappingQueries {
 
     // append header-compatibility verdicts (io.py:361-391): widen +
     // narrow + retype the documents schema and report every mismatch —
-    // the same compatIssues that appendWithSchemaCheck requires to be
+    // the same compatIssues that Tables.append requires to be
     // all-ok. Spark introspects the parquet footer via its reader; the
     // oracle introspects the SAME footer via DuckDB's DESCRIBE — two
     // independent reads that must agree (the twin transform below is

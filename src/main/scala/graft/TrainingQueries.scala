@@ -55,9 +55,9 @@ object TrainingQueries {
     // Scan.spread on the signature-ONLY entries: the one-pass codegen
     // signature fuses into the scan stage and the driver's one-row-group
     // parquet cannot split (guide §2.5) — without the spread the whole
-    // pass runs on one core. The pair pipelines are NOT spread: their
-    // cost is the join cascade, and spreading their signature pass
-    // measured neutral-to-worse (r06).
+    // pass runs on one core. The LSH pair pipelines spread inside
+    // Sim.minhashSigBase instead, to a quarter of the cores: their cost
+    // is the join cascade after the signature pass.
     "sim_minhash_sig" -> ((s, dir) =>
       Sim.minhashSignatures(
         graft.io.Scan.spread(s.read.parquet(s"$dir/documents.parquet")),

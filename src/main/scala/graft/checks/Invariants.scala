@@ -86,65 +86,40 @@ object Invariants {
         concat(col("digest_prev"), lit("->"), col("digest")).as("detail"),
         lit("processing").as("stage"))
 
-  /** LIFETIME CONTRACT: the returned violations DataFrame is PERSISTED
+  /** Compare `batch` against the digest `store` and append the urls it
+    * has not seen. The store is either kind of [[graft.io.Tables.Table]]:
+    * a bucketed store read by a url-bucketed batch runs the compare join
+    * AND the append-if-absent anti join with zero exchanges (both
+    * merge-hinted through [[graft.io.Tables.keyJoinSide]]), so the
+    * cross-run invariant never re-shuffles the fact table.
+    *
+    * LIFETIME CONTRACT: the returned violations DataFrame is PERSISTED
     * (it must materialize before the new-digest append below mutates the
     * store it reads) — the caller unpersists after consuming it, or a
     * long-lived session leaks one cached DataFrame per run.
     */
-  def checkAndStoreDigests(spark: org.apache.spark.sql.SparkSession,
-                           batch: DataFrame, root: String, runId: String): DataFrame = {
+  def checkAndStoreDigests(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
+                           store: graft.io.Tables.Table, runId: String): DataFrame = {
     import graft.io.Tables
-    val path = s"$root/digests"
     val cur = canonicalDigests(batch)
-    if (!Tables.exists(spark, path)) {
-      Tables.appendWithSchemaCheck(spark,
-        cur.withColumn("run_id", lit(runId)), path)
+    if (!Tables.exists(spark, store)) {
+      Tables.append(spark, cur.withColumn("run_id", lit(runId)), store)
       return cur.limit(0).select(col("part"), col("url"),
         lit("text_digest").as("check_name"), lit("").as("detail"),
         lit("processing").as("stage")).withColumn("run_id", lit(runId))
     }
     // one row per url by construction — no distinct() over history needed
-    val prev = Tables.read(spark, path)
-      .select(col("url"), col("digest").as("digest_prev"))
-    val out = digestViolationsAgainst(cur, prev)
+    val curSide = Tables.keyJoinSide(store, cur)
+    val prev = Tables.keyJoinSide(store, Tables.read(spark, store)
+      .select(col("url"), col("digest").as("digest_prev")))
+    val out = digestViolationsAgainst(curSide, prev)
       .withColumn("run_id", lit(runId)).persist()
     out.count() // materialize BEFORE appending new digests below
-    val newUrls = cur.join(prev.select(col("url")), Seq("url"), "left_anti")
-    Tables.appendWithSchemaCheck(spark,
+    val newUrls = curSide
+      .join(Tables.keyJoinSide(store, prev.select(col("url"))), Seq("url"), "left_anti")
+    Tables.append(spark,
       newUrls.select(col("part"), col("url"), col("digest"))
-        .withColumn("run_id", lit(runId)), path)
-    out
-  }
-
-  /** Bucketed twin of [[checkAndStoreDigests]]: the digest STORE is a
-    * url-bucketed catalog table ([[graft.io.Tables.writeBucketed]]), so
-    * when the batch also comes from a url-bucketed scan the compare join
-    * AND the append-if-absent anti join both run with zero exchanges —
-    * the cross-run invariant never re-shuffles the fact table. Joins are
-    * merge-hinted (fact-fact; see [[graft.checks.DatasetChecks.urlChecksColocated]]).
-    */
-  def checkAndStoreDigestsBucketed(spark: org.apache.spark.sql.SparkSession,
-                                   batch: DataFrame, table: String, path: String,
-                                   runId: String, buckets: Int = 8): DataFrame = {
-    import graft.io.Tables
-    val cur = canonicalDigests(batch)
-    if (!spark.catalog.tableExists(table)) {
-      Tables.writeBucketed(cur.withColumn("run_id", lit(runId)),
-        table, path, "url", buckets)
-      return cur.limit(0).select(col("part"), col("url"),
-        lit("text_digest").as("check_name"), lit("").as("detail"),
-        lit("processing").as("stage")).withColumn("run_id", lit(runId))
-    }
-    val prev = spark.table(table)
-      .select(col("url"), col("digest").as("digest_prev")).hint("merge")
-    val out = digestViolationsAgainst(cur.hint("merge"), prev)
-      .withColumn("run_id", lit(runId)).persist()
-    out.count() // materialize BEFORE appending new digests below
-    val newUrls = cur.hint("merge")
-      .join(prev.select(col("url")).hint("merge"), Seq("url"), "left_anti")
-    Tables.appendBucketed(spark,
-      newUrls.select(col("part"), col("url"), col("digest"))
-        .withColumn("run_id", lit(runId)), table, path, "url", buckets)
+        .withColumn("run_id", lit(runId)), store)
     out
   }
 }

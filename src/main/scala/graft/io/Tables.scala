@@ -21,15 +21,6 @@ object Tables {
     fs.exists(path)
   }
 
-  /** Write a table partitioned by the given column (the "per-partition"
-    * unit for verdicts/stats/lineage — a TABLE partition, never a Spark
-    * task partition).
-    */
-  def writePartitioned(df: DataFrame, root: String,
-                       partitionCol: String = "part",
-                       mode: String = "error"): Unit =
-    df.write.mode(mode).partitionBy(partitionCol).parquet(root)
-
   def read(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(root)
 
@@ -51,8 +42,8 @@ object Tables {
       .bucketBy(buckets, bucketCol).sortBy(bucketCol)
       .option("path", path).format("parquet").saveAsTable(table)
 
-  /** The header-compatibility contract shared by both append paths
-    * (io.py:381-387): no new columns, no missing columns, no type
+  /** The header-compatibility contract of [[append]] for both kinds of
+    * table (io.py:381-387): no new columns, no missing columns, no type
     * changes — strict by-name match, order-insensitive, like Iceberg's
     * write contract. Returns the incoming frame realigned to the
     * table's column order.
@@ -133,32 +124,54 @@ object Tables {
     }
   }
 
-  /** Bucketed twin of [[appendWithSchemaCheck]]: same header contract,
-    * appends THROUGH the catalog so every appended file lands in its
-    * url-hash bucket (a plain parquet append would break the layout —
-    * Spark validates the bucket spec on catalog appends).
+  /** Where a table lives: a parquet directory, or a catalog table
+    * hash-bucketed by `bucketCol` whose files sit at `path`. Every layer
+    * above this package names a table by one of these values and never
+    * matches on which it is.
     */
-  def appendBucketed(spark: SparkSession, df: DataFrame, table: String,
-                     path: String, bucketCol: String = "url",
-                     buckets: Int = 8): Unit = {
-    if (spark.catalog.tableExists(table)) {
-      checkAndAlign(spark.table(table).schema, df).write.mode("append")
-        .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .format("parquet").saveAsTable(table)
-    } else writeBucketed(df, table, path, bucketCol, buckets)
+  sealed trait Table
+  final case class ParquetTable(path: String) extends Table
+  final case class BucketedTable(name: String, path: String, bucketCol: String,
+                                 buckets: Int) extends Table
+
+  def exists(spark: SparkSession, t: Table): Boolean = t match {
+    case ParquetTable(path) => exists(spark, path)
+    case b: BucketedTable => spark.catalog.tableExists(b.name)
+  }
+
+  def read(spark: SparkSession, t: Table): DataFrame = t match {
+    case ParquetTable(path) => read(spark, path)
+    case b: BucketedTable => spark.table(b.name)
+  }
+
+  /** `df` as one side of a join on the bucket column of `t`: merge-hinted
+    * for a bucketed table (fact-fact; a broadcast would drop the storage
+    * distribution the join exists to use), unchanged for a parquet one.
+    */
+  def keyJoinSide(t: Table, df: DataFrame): DataFrame = t match {
+    case _: ParquetTable => df
+    case _: BucketedTable => df.hint("merge")
   }
 
   /** Append with the reference's header-compatibility contract
     * (io.py:381-387): the incoming schema must not introduce columns the
     * table doesn't already have; missing columns are an error too (strict
     * by-name match, order-insensitive, like Iceberg's write contract).
+    * The first append creates the table. A bucketed table is appended
+    * THROUGH the catalog so every appended file lands in its url-hash
+    * bucket (a plain parquet append would break the layout — Spark
+    * validates the bucket spec on catalog appends).
     */
-  def appendWithSchemaCheck(spark: SparkSession, df: DataFrame, root: String): Unit = {
-    if (exists(spark, root)) {
-      checkAndAlign(spark.read.parquet(root).schema, df)
-        .write.mode("append").parquet(root)
+  def append(spark: SparkSession, df: DataFrame, t: Table): Unit =
+    if (!exists(spark, t)) t match {
+      case ParquetTable(path) => df.write.mode("error").parquet(path)
+      case b: BucketedTable => writeBucketed(df, b.name, b.path, b.bucketCol, b.buckets)
     } else {
-      df.write.mode("error").parquet(root)
+      val w = checkAndAlign(read(spark, t).schema, df).write.mode("append")
+      t match {
+        case ParquetTable(path) => w.parquet(path)
+        case b: BucketedTable => w.bucketBy(b.buckets, b.bucketCol).sortBy(b.bucketCol)
+          .format("parquet").saveAsTable(b.name)
+      }
     }
-  }
 }

@@ -31,48 +31,94 @@ object ValidationRun {
   def verdictsPath(root: String) = s"$root/verdicts"
   def metricsPath(root: String) = s"$root/metrics"
   def lineagePath(root: String) = s"$root/run_lineage"
+  def digestsPath(root: String) = s"$root/digests"
+  def urlViolationsPath(root: String) = s"$root/url_violations"
 
-  /** Run the suite over all partitions not yet checkpointed under `root`.
-    * `statsColumns` get a per-partition stats row each.
-    */
+  /** Storage layout of a pass's input and digest store. */
+  sealed trait Layout
+  object Layout {
+    /** Pages in any layout; the digest store is a parquet directory. */
+    case object Plain extends Layout
+
+    /** The write-once-shuffle layout ([[graft.io.Tables.writeBucketed]]):
+      * `pages` and `lineage` are scans of catalog tables bucketed by url
+      * with the same bucket count (partition-pruning filters on top are
+      * fine — they preserve the storage distribution), and the digest
+      * store is kept bucketed too, so EVERY url-keyed operation in the
+      * pass — uniqueness dedup check, lineage referential integrity,
+      * cross-run digest compare and its append-if-absent — plans with
+      * zero exchanges (PlanSpec asserts the composed plan). On a cluster
+      * this layout is an Iceberg `bucket(N, url)` partition transform;
+      * repeated validation runs never re-shuffle the fact table.
+      */
+    final case class Bucketed(lineage: DataFrame, buckets: Int) extends Layout
+  }
+
+  /** Run the suite over all partitions not yet checkpointed under `root`. */
   def run(spark: SparkSession, pages: DataFrame, suite: Seq[Constraint],
-          root: String, runId: String, keyCols: Seq[String] = Seq("url"),
-          statsColumns: Seq[String] = Seq("url", "lang")): Report = {
-    val done = Checkpoint.completedParts(spark, root)
-    val todo = if (done.isEmpty) pages
-      else pages.filter(!col("part").isin(done.toSeq: _*))
+          root: String, runId: String): Report =
+    pass(spark, pages, suite, root, runId, Layout.Plain)
+
+  /** [[run]] over the bucketed layout ([[Layout.Bucketed]]). Additional
+    * outputs: the two url-keyed dataset checks against `lineage` append
+    * their violation rows (with `doc_id` provenance) to `url_violations`
+    * and join the per-(part, check) verdict grid alongside the row
+    * constraints.
+    *
+    * Correctness requires url-co-partitioned input (`part` derived from
+    * url-hash, as [[graft.gen.WebGen.pages]] does): resumed batches are
+    * unions of whole table partitions, so a url never spans batches and
+    * uniqueness/digest results compose (see [[graft.checks.Invariants]]).
+    */
+  def runBucketed(spark: SparkSession, pages: DataFrame, lineage: DataFrame,
+                  suite: Seq[Constraint], root: String, runId: String,
+                  buckets: Int = 8): Report =
+    pass(spark, pages, suite, root, runId, Layout.Bucketed(lineage, buckets))
+
+  private val StatsColumns = Seq("url", "lang")
+
+  /** The one validation pass; `layout` decides whether the batch is
+    * cached, whether the url checks run and where the digest store lives.
+    */
+  private def pass(spark: SparkSession, pages: DataFrame, suite: Seq[Constraint],
+                   root: String, runId: String, layout: Layout): Report = {
+    val manifest = Checkpoint.state(spark, root)
+    val todo = if (manifest.done.isEmpty) pages
+      else pages.filter(!col("part").isin(manifest.done.toSeq.sorted: _*))
     val parts = todo.select("part").distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (parts.isEmpty) return Report(runId, Checkpoint.latestSnapshotId(spark, root), Nil, 0L)
+    if (parts.isEmpty) return Report(runId, manifest.latest, Nil, 0L)
 
-    // cache: violations, verdicts and stats share one scan of the batch
-    val batch = todo.persist()
+    // Plain caches the batch: violations, verdicts and stats share one
+    // scan. Bucketed does not: each output pass re-scans the bucketed
+    // table with pruned columns — cheaper than dragging text+html through
+    // a deserialized cache, and a cache would hide the storage
+    // distribution the pass exists to exploit (ScalingBench note).
+    val (cache, urlLineage, digests) = layout match {
+      case Layout.Plain => (true, None, Tables.ParquetTable(digestsPath(root)))
+      case Layout.Bucketed(lineage, buckets) => (false, Some(lineage),
+        Tables.BucketedTable(digestTableName(root), s"$root/digests_bkt", "url", buckets))
+    }
+    val batch = if (cache) todo.persist() else todo
+    def stamp(df: DataFrame): DataFrame = df.withColumn("run_id", lit(runId))
+    def append(df: DataFrame, path: String): Unit =
+      Tables.append(spark, df, Tables.ParquetTable(path))
     try {
-      val viol = Runner.violations(batch, suite, keyCols)
-        .withColumn("run_id", lit(runId))
-      Tables.appendWithSchemaCheck(spark, viol, violationsPath(root))
-
-      val verd = Runner.verdicts(batch, suite)
-        .withColumn("run_id", lit(runId))
-      Tables.appendWithSchemaCheck(spark, verd, verdictsPath(root))
-
-      val stats = Stats.columnStats(batch, statsColumns)
-        .withColumn("run_id", lit(runId))
-      Tables.appendWithSchemaCheck(spark, stats, metricsPath(root))
-
-      val lenHist = Stats.lengthHistogram(batch, "text")
-        .withColumn("run_id", lit(runId))
-      Tables.appendWithSchemaCheck(spark, lenHist, s"$root/len_hist")
+      append(stamp(Runner.violations(batch, suite, Seq("url"))), violationsPath(root))
+      val rowVerdicts = Runner.verdicts(batch, suite)
+      append(stamp(urlLineage.fold(rowVerdicts)(lineage =>
+        rowVerdicts.unionByName(urlCheckVerdicts(spark, batch, lineage, root, runId)))),
+        verdictsPath(root))
+      append(stamp(Stats.columnStats(batch, StatsColumns)), metricsPath(root))
+      append(stamp(Stats.lengthHistogram(batch, "text")), s"$root/len_hist")
 
       // cross-run row invariant: byte-identical text per url
       // (BASELINE.json::input_hint); changed digests append to the same
-      // violations table as the row constraints
-      val digViol = graft.checks.Invariants.checkAndStoreDigests(spark, batch, root, runId)
-      val digTarget = if (keyCols == Seq("url")) violationsPath(root)
-        else s"$root/digest_violations" // key shapes differ: keep own table
-      // digViol comes back persisted (materialized before the digest
-      // append); release its blocks once consumed or a long-lived
-      // session leaks one cached DataFrame per run
-      try Tables.appendWithSchemaCheck(spark, digViol, digTarget)
+      // violations table as the row constraints. digViol comes back
+      // persisted (materialized before the digest append); release its
+      // blocks once consumed or a long-lived session leaks one cached
+      // DataFrame per run
+      val digViol = graft.checks.Invariants.checkAndStoreDigests(spark, batch, digests, runId)
+      try append(digViol, violationsPath(root))
       finally digViol.unpersist()
 
       val rows = batch.count()
@@ -83,117 +129,42 @@ object ValidationRun {
       // crash between the two then loses a re-appendable audit row of a
       // failed attempt, not (as commit-first would) the audit trail of a
       // batch the manifest says is done.
-      val snap = Checkpoint.nextSnapshotId(spark, root)
-      val lineage = batch.groupBy(col("part")).agg(count(lit(1)).as("row_count"))
-        .withColumn("run_id", lit(runId))
+      val snap = manifest.next
+      append(stamp(batch.groupBy(col("part")).agg(count(lit(1)).as("row_count")))
         .withColumn("snapshot_id", lit(snap))
-        .withColumn("committed_at", current_timestamp())
-      Tables.appendWithSchemaCheck(spark, lineage, lineagePath(root))
-      val committed = Checkpoint.commit(spark, root, runId, parts)
-      require(committed == snap,
-        s"concurrent checkpoint writer detected ($committed != $snap)")
+        .withColumn("committed_at", current_timestamp()), lineagePath(root))
+      Checkpoint.commit(spark, root, runId, parts, snap)
 
       Report(runId, snap, parts, rows)
-    } finally batch.unpersist()
+    } finally if (cache) batch.unpersist()
   }
 
-  /** Bucketed-layout variant of [[run]] — the main pass over the
-    * write-once-shuffle storage layout ([[graft.io.Tables.writeBucketed]]):
-    * `pages` and `lineage` are scans of catalog tables bucketed by url
-    * with the same bucket count (partition-pruning filters on top are
-    * fine — they preserve the storage distribution), and the digest
-    * store is kept bucketed too, so EVERY url-keyed operation in the pass — uniqueness dedup
-    * check, lineage referential integrity, cross-run digest compare and
-    * its append-if-absent — plans with zero exchanges (PlanSpec asserts
-    * the composed plan). On a cluster this layout is an Iceberg
-    * `bucket(N, url)` partition transform; repeated validation runs never
-    * re-shuffle the fact table.
-    *
-    * Additional outputs vs [[run]]: the two dataset checks append their
-    * violation rows (with `doc_id` provenance) to `url_violations` and
-    * join the per-(part, check) verdict grid alongside the row
-    * constraints.
-    *
-    * No `persist`: each output pass re-scans the bucketed table with
-    * pruned columns — cheaper than dragging text+html through a
-    * deserialized cache, and a cache would hide the storage
-    * distribution the pass exists to exploit (ScalingBench note).
-    *
-    * Correctness requires url-co-partitioned input (`part` derived from
-    * url-hash, as [[graft.gen.WebGen.pages]] does): resumed batches are
-    * unions of whole table partitions, so a url never spans batches and
-    * uniqueness/digest results compose (see [[graft.checks.Invariants]]).
+  /** The url-keyed dataset checks of a bucketed pass: appends their
+    * violation rows to `url_violations` and returns their verdicts.
+    * Only well-formed urls participate — the malformed ones are the row
+    * suite's finding, and they'd all "dangle" as noise here.
     */
-  def runBucketed(spark: SparkSession, pages: DataFrame, lineage: DataFrame,
-                  suite: Seq[Constraint], root: String, runId: String,
-                  statsColumns: Seq[String] = Seq("url", "lang"),
-                  buckets: Int = 8): Report = {
-    val done = Checkpoint.completedParts(spark, root)
-    val todo = if (done.isEmpty) pages
-      else pages.filter(!col("part").isin(done.toSeq: _*))
-    val parts = todo.select("part").distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (parts.isEmpty) return Report(runId, Checkpoint.latestSnapshotId(spark, root), Nil, 0L)
-
-    val viol = Runner.violations(todo, suite, Seq("url"))
-      .withColumn("run_id", lit(runId))
-    Tables.appendWithSchemaCheck(spark, viol, violationsPath(root))
-
-    // url-keyed dataset checks over the co-located layout (zero-exchange
-    // plan); only well-formed urls participate — the malformed ones are
-    // the row suite's finding, and they'd all "dangle" as noise here
-    val valid = todo.filter(graft.constraints.Constraints.validUrl)
+  private def urlCheckVerdicts(spark: SparkSession, batch: DataFrame, lineage: DataFrame,
+                               root: String, runId: String): DataFrame = {
+    import graft.checks.DatasetChecks
+    import graft.constraints.Constraints.validUrl
     val ord = struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
       (-col("doc_id")).as("negid"))
-    val urlViol = graft.checks.DatasetChecks
-      .urlChecksColocated(valid, lineage, ord)
-      .withColumn("run_id", lit(runId))
-    Tables.appendWithSchemaCheck(spark, urlViol, s"$root/url_violations")
-
-    // count over TODO (conditional sum), not over `valid`: a partition
-    // whose urls are ALL malformed would otherwise have no part-count
-    // row, and the url checks would be silently ABSENT from its verdict
-    // grid instead of present as passed-with-0-checked-rows — the dense
-    // per-(part, check) grid is the contract (DatasetChecks scaladoc)
-    val pc = todo.groupBy(col("part")).agg(
-      sum(when(graft.constraints.Constraints.validUrl, 1L).otherwise(0L))
-        .as("row_count"))
-    val verd = Runner.verdicts(todo, suite)
-      .unionByName(graft.checks.DatasetChecks.verdictsFromViolations(
-        spark.read.parquet(s"$root/url_violations")
-          .filter(col("run_id") === runId)
-          .dropDuplicates("run_id", "part", "doc_id", "check_name"),
-        pc, Seq("url_unique", "url_lineage")))
-      .withColumn("run_id", lit(runId))
-    Tables.appendWithSchemaCheck(spark, verd, verdictsPath(root))
-
-    val stats = Stats.columnStats(todo, statsColumns)
-      .withColumn("run_id", lit(runId))
-    Tables.appendWithSchemaCheck(spark, stats, metricsPath(root))
-
-    val lenHist = Stats.lengthHistogram(todo, "text")
-      .withColumn("run_id", lit(runId))
-    Tables.appendWithSchemaCheck(spark, lenHist, s"$root/len_hist")
-
-    // cross-run digest invariant against the BUCKETED store — compare
-    // join and append-if-absent anti join are both exchange-free
-    val digViol = graft.checks.Invariants.checkAndStoreDigestsBucketed(
-      spark, todo, digestTableName(root), s"$root/digests_bkt", runId, buckets)
-    try Tables.appendWithSchemaCheck(spark, digViol, violationsPath(root))
-    finally digViol.unpersist()
-
-    val rows = todo.count()
-    // lineage BEFORE commit — see run() for the crash-window rationale
-    val snap = Checkpoint.nextSnapshotId(spark, root)
-    val lineageRows = todo.groupBy(col("part")).agg(count(lit(1)).as("row_count"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("snapshot_id", lit(snap))
-      .withColumn("committed_at", current_timestamp())
-    Tables.appendWithSchemaCheck(spark, lineageRows, lineagePath(root))
-    val committed = Checkpoint.commit(spark, root, runId, parts)
-    require(committed == snap,
-      s"concurrent checkpoint writer detected ($committed != $snap)")
-
-    Report(runId, snap, parts, rows)
+    Tables.append(spark, DatasetChecks.urlChecksColocated(batch.filter(validUrl), lineage, ord)
+      .withColumn("run_id", lit(runId)), Tables.ParquetTable(urlViolationsPath(root)))
+    // count over the batch (conditional sum), not over the valid urls: a
+    // partition whose urls are ALL malformed would otherwise have no
+    // part-count row, and the url checks would be silently ABSENT from
+    // its verdict grid instead of present as passed-with-0-checked-rows —
+    // the dense per-(part, check) grid is the contract (DatasetChecks
+    // scaladoc)
+    val pc = batch.groupBy(col("part")).agg(
+      sum(when(validUrl, 1L).otherwise(0L)).as("row_count"))
+    DatasetChecks.verdictsFromViolations(
+      spark.read.parquet(urlViolationsPath(root))
+        .filter(col("run_id") === runId)
+        .dropDuplicates("run_id", "part", "doc_id", "check_name"),
+      pc, Seq("url_unique", "url_lineage"))
   }
 
   /** Catalog name for a root's bucketed digest store. MD5 of the root,
@@ -217,7 +188,7 @@ object ValidationRun {
 
   /** Read back the audit trail restricted to COMMITTED attempts.
     * Lineage rows are appended BEFORE the manifest commit (crash-window
-    * rationale in [[run]]), so a crash between the two leaves orphan
+    * rationale in the pass), so a crash between the two leaves orphan
     * rows whose snapshot_id the retry REUSES — the raw table can hold
     * duplicate (snapshot_id, part) rows under different run_ids. The
     * semi join against the manifest's (snapshot_id, run_id) keeps
@@ -239,6 +210,6 @@ object ValidationRun {
     * contract as [[currentVerdicts]].
     */
   def currentUrlViolations(spark: SparkSession, root: String): DataFrame =
-    Tables.read(spark, s"$root/url_violations")
+    Tables.read(spark, urlViolationsPath(root))
       .dropDuplicates("run_id", "part", "doc_id", "check_name")
 }

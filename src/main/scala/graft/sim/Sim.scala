@@ -59,11 +59,9 @@ object Sim {
     // but the relational twin yields an EMPTY array for NULL text
     // (size(null) >= n is null -> otherwise branch) — shingle("") = []
     // keeps the two value-identical on null-text corpora.
-    // NOT spread here: this feeds the LSH pair pipelines, whose cost is
-    // the downstream join cascade — measured r06, spreading the
-    // signature pass inside them traded the one single-task job for
-    // more stages at equal-or-worse wall time; the signature-only
-    // queries spread at their own entry instead (TrainingQueries)
+    // NOT spread here: callers choose the width — the LSH pair
+    // pipelines spread to a quarter of the cores in [[minhashSigBase]],
+    // the signature-only queries at their own entry (TrainingQueries)
     docs.select(col(idCol).as("id"),
       graft.expr.WordShingles.wordShingles(coalesce(col(textCol), lit("")), n).as("shs"))
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.constraints.Constraints
-import graft.gen.Derive
+import graft.io.Tables
 import graft.runner.ValidationRun
 
 /** End-to-end drive of the resumable validation pipeline: partial run →
@@ -43,7 +43,8 @@ object RunDemo {
         .otherwise(col("text")))
     val nTampered = tampered.filter(col("doc_id") % 113 === 44 &&
       col("url").isNotNull && col("text") =!= "").count()
-    val dv = graft.checks.Invariants.checkAndStoreDigests(spark, tampered, root, "run-3")
+    val dv = graft.checks.Invariants.checkAndStoreDigests(spark, tampered,
+      Tables.ParquetTable(ValidationRun.digestsPath(root)), "run-3")
     println(s"[demo] digest-invariant violations after tamper=${dv.count()} (tampered rows=$nTampered)")
     spark.stop()
   }

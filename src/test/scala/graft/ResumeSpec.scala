@@ -17,6 +17,8 @@ class ResumeSpec extends SparkSpecBase {
   def tmp(): String = Files.createTempDirectory("graft-resume").toString
   lazy val pages = Derive.webPages(spark, "/root/testdata/sf0.001")
 
+  private def digestStore(root: String) = Tables.ParquetTable(ValidationRun.digestsPath(root))
+
   private def verdictSet(root: String): Set[String] =
     ValidationRun.currentVerdicts(spark, root)
       .select("part", "check_name", "passed", "violation_count", "row_count")
@@ -31,8 +33,8 @@ class ResumeSpec extends SparkSpecBase {
     val rep2 = ValidationRun.run(spark, pages, Constraints.webtextSuite, split, "r1")
     assert(rep2.partsProcessed == Seq(4, 5, 6, 7), "resume must only process missing partitions")
     assert(verdictSet(full) == verdictSet(split))
-    assert(Checkpoint.latestSnapshotId(spark, split) == 2L)
-    assert(Checkpoint.completedParts(spark, split) == (0 to 7).toSet)
+    assert(Checkpoint.state(spark, split).latest == 2L)
+    assert(Checkpoint.state(spark, split).done == (0 to 7).toSet)
   }
 
   test("digest invariant: mutated text is detected on the next run") {
@@ -45,7 +47,7 @@ class ResumeSpec extends SparkSpecBase {
       when(col("doc_id") % 113 === 44, concat(col("text"), lit(" tampered")))
         .otherwise(col("text")))
     val viol = graft.checks.Invariants
-      .checkAndStoreDigests(spark, mutated, root, "r2")
+      .checkAndStoreDigests(spark, mutated, digestStore(root), "r2")
     val changed = viol.collect()
     assert(changed.nonEmpty && changed.forall(_.getString(2) == "text_digest"))
     // every flagged row is one of the tampered urls
@@ -58,7 +60,7 @@ class ResumeSpec extends SparkSpecBase {
     val root = tmp()
     val urls = pages.filter(col("url").isNotNull).select("url").distinct().count()
     (1 to 5).foreach { i =>
-      graft.checks.Invariants.checkAndStoreDigests(spark, pages, root, s"r$i")
+      graft.checks.Invariants.checkAndStoreDigests(spark, pages, digestStore(root), s"r$i")
     }
     val stored = spark.read.parquet(s"$root/digests")
     assert(stored.count() == urls,
@@ -67,7 +69,7 @@ class ResumeSpec extends SparkSpecBase {
     // first-seen digest is the contract: a later run's mutation both
     // reports a violation AND leaves the stored canonical untouched
     val mutated = pages.withColumn("text", concat(col("text"), lit(" zz")))
-    val viol = graft.checks.Invariants.checkAndStoreDigests(spark, mutated, root, "r6")
+    val viol = graft.checks.Invariants.checkAndStoreDigests(spark, mutated, digestStore(root), "r6")
     assert(viol.count() > 0)
     assert(spark.read.parquet(s"$root/digests").count() == urls)
   }
@@ -116,7 +118,7 @@ class ResumeSpec extends SparkSpecBase {
     // collapses in the reader, same contract as currentVerdicts
     val uv = spark.read.parquet(s"$full/url_violations")
     val before = ValidationRun.currentUrlViolations(spark, full).count()
-    Tables.appendWithSchemaCheck(spark, uv.limit(25), s"$full/url_violations")
+    Tables.append(spark, uv.limit(25), Tables.ParquetTable(s"$full/url_violations"))
     assert(ValidationRun.currentUrlViolations(spark, full).count() == before)
     Seq("rs_pages_b", "rs_lineage_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
@@ -136,14 +138,14 @@ class ResumeSpec extends SparkSpecBase {
     val partialVerd = graft.runner.Runner.verdicts(batch, Constraints.webtextSuite)
       .filter(col("part") === 5) // only one partition's grid made it out
       .withColumn("run_id", lit("r2-crashed"))
-    Tables.appendWithSchemaCheck(spark, partialVerd, ValidationRun.verdictsPath(root))
-    val snap = Checkpoint.nextSnapshotId(spark, root)
+    Tables.append(spark, partialVerd, Tables.ParquetTable(ValidationRun.verdictsPath(root)))
+    val snap = Checkpoint.state(spark, root).next
     assert(snap == 2L)
     val crashedLineage = batch.groupBy(col("part")).agg(count(lit(1)).as("row_count"))
       .withColumn("run_id", lit("r2-crashed"))
       .withColumn("snapshot_id", lit(snap))
       .withColumn("committed_at", current_timestamp())
-    Tables.appendWithSchemaCheck(spark, crashedLineage, ValidationRun.lineagePath(root))
+    Tables.append(spark, crashedLineage, Tables.ParquetTable(ValidationRun.lineagePath(root)))
 
     // manifest still says only parts 0-3 are done: the retry reprocesses
     // 4-7 and REUSES snapshot id 2 under its own run id
@@ -175,6 +177,66 @@ class ResumeSpec extends SparkSpecBase {
     assert(verdictSet(root) == verdictSet(full))
   }
 
+  test("commit with a stale expected snapshot id fails before it writes") {
+    val root = tmp()
+    ValidationRun.run(spark, pages.filter(col("part") < 4), Constraints.webtextSuite, root, "r1")
+    val read = Checkpoint.state(spark, root)
+    // another writer commits after this pass read the manifest
+    Checkpoint.commit(spark, root, "other", Seq(4), read.next)
+    val manifest = Checkpoint.manifest(spark, root).collect().map(_.mkString("|")).toSet
+    val e = intercept[IllegalArgumentException] {
+      Checkpoint.commit(spark, root, "r1", Seq(5, 6, 7), read.next)
+    }
+    assert(e.getMessage.contains("concurrent checkpoint writer"))
+    assert(Checkpoint.manifest(spark, root).collect().map(_.mkString("|")).toSet == manifest)
+    assert(Checkpoint.state(spark, root) == Checkpoint.State((0 to 4).toSet, 2L))
+  }
+
+  test("plain and bucketed layouts give the same outputs over the same pages") {
+    val wh = tmp()
+    val tables = Seq("le_pages_b", "le_lineage_b")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val gen = graft.gen.WebGen.pages(spark, 4000, parts = 8)
+    // every 50th page again in the other batch with changed text: the
+    // second batch's digest compare then reports text_digest violations
+    val copies = gen.filter(col("doc_id") % 50 === 0)
+      .withColumn("part", (col("part") + 4) % 8)
+      .withColumn("text", concat(col("text"), lit(" v2")))
+    Tables.writeBucketed(gen.unionByName(copies), "le_pages_b", s"$wh/pages", "url", 8)
+    Tables.writeBucketed(graft.bench.BenchUtil.syntheticLineage(gen.filter(Constraints.validUrl)),
+      "le_lineage_b", s"$wh/lineage", "url", 8)
+    val pb = spark.table("le_pages_b")
+    val plain = tmp(); val bkt = tmp()
+    (0 until 2).foreach { i =>
+      val batch = pb.filter(col("part") < 4 * (i + 1))
+      ValidationRun.run(spark, batch, Constraints.webtextSuite, plain, "r1")
+      ValidationRun.runBucketed(spark, batch, spark.table("le_lineage_b"),
+        Constraints.webtextSuite, bkt, "r1")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    def out(root: String, table: String) = rows(spark.read.parquet(s"$root/$table"))
+
+    val rowChecks = Constraints.webtextSuite.map(_.name)
+    def rowVerdicts(root: String) =
+      rows(spark.read.parquet(ValidationRun.verdictsPath(root))
+        .filter(col("check_name").isin(rowChecks: _*)))
+    assert(rowVerdicts(plain).size == 8 * rowChecks.size)
+    assert(rowVerdicts(plain) == rowVerdicts(bkt))
+    assert(spark.read.parquet(ValidationRun.verdictsPath(bkt))
+      .filter(col("check_name").isin("url_unique", "url_lineage")).count() == 8 * 2)
+    Seq("violations", "metrics", "len_hist").foreach(t => assert(out(plain, t) == out(bkt, t), t))
+    assert(spark.read.parquet(ValidationRun.violationsPath(plain))
+      .filter(col("check_name") === "text_digest").count() > 0)
+    def lineage(root: String) =
+      rows(ValidationRun.currentLineage(spark, root)
+        .select("part", "row_count", "snapshot_id", "run_id"))
+    assert(lineage(plain).size == 8 && lineage(plain) == lineage(bkt))
+    assert(out(plain, "digests") == out(bkt, "digests_bkt"))
+    (tables :+ ValidationRun.digestTableName(bkt))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("re-running a completed root is a no-op") {
     val root = tmp()
     ValidationRun.run(spark, pages, Constraints.webtextSuite, root, "r1")
@@ -183,18 +245,18 @@ class ResumeSpec extends SparkSpecBase {
   }
 
   test("append rejects new columns, missing columns, and type changes") {
-    val root = tmp() + "/t"
-    Tables.appendWithSchemaCheck(spark, Seq((1, "a")).toDF("id", "v"), root)
-    Tables.appendWithSchemaCheck(spark, Seq((2, "b")).toDF("id", "v"), root)
-    assert(spark.read.parquet(root).count() == 2)
+    val t = Tables.ParquetTable(tmp() + "/t")
+    Tables.append(spark, Seq((1, "a")).toDF("id", "v"), t)
+    Tables.append(spark, Seq((2, "b")).toDF("id", "v"), t)
+    assert(spark.read.parquet(t.path).count() == 2)
     intercept[IllegalArgumentException] {
-      Tables.appendWithSchemaCheck(spark, Seq((3, "c", 1.0)).toDF("id", "v", "extra"), root)
+      Tables.append(spark, Seq((3, "c", 1.0)).toDF("id", "v", "extra"), t)
     }
     intercept[IllegalArgumentException] {
-      Tables.appendWithSchemaCheck(spark, Seq(Tuple1(4)).toDF("id"), root)
+      Tables.append(spark, Seq(Tuple1(4)).toDF("id"), t)
     }
     intercept[IllegalArgumentException] {
-      Tables.appendWithSchemaCheck(spark, Seq((5, 6)).toDF("id", "v"), root)
+      Tables.append(spark, Seq((5, 6)).toDF("id", "v"), t)
     }
   }
 
@@ -216,19 +278,19 @@ class ResumeSpec extends SparkSpecBase {
   test("bucketed append enforces the header contract and keeps the layout") {
     val wh = tmp()
     spark.sql("DROP TABLE IF EXISTS ab_t")
-    Tables.appendBucketed(spark, Seq((1, "u1")).toDF("id", "url"), "ab_t", s"$wh/t", "url", 4)
+    val ab = Tables.BucketedTable("ab_t", s"$wh/t", "url", 4)
+    Tables.append(spark, Seq((1, "u1")).toDF("id", "url"), ab)
     // reversed column order, same names/types → aligned and appended
-    Tables.appendBucketed(spark, Seq(("u2", 2)).toDF("url", "id"), "ab_t", s"$wh/t", "url", 4)
+    Tables.append(spark, Seq(("u2", 2)).toDF("url", "id"), ab)
     assert(spark.table("ab_t").count() == 2)
     intercept[IllegalArgumentException] {
-      Tables.appendBucketed(spark, Seq((3, "u3", 1.0)).toDF("id", "url", "extra"),
-        "ab_t", s"$wh/t", "url", 4)
+      Tables.append(spark, Seq((3, "u3", 1.0)).toDF("id", "url", "extra"), ab)
     }
     intercept[IllegalArgumentException] {
-      Tables.appendBucketed(spark, Seq(Tuple1(4)).toDF("id"), "ab_t", s"$wh/t", "url", 4)
+      Tables.append(spark, Seq(Tuple1(4)).toDF("id"), ab)
     }
     intercept[IllegalArgumentException] {
-      Tables.appendBucketed(spark, Seq((5, 6)).toDF("id", "url"), "ab_t", s"$wh/t", "url", 4)
+      Tables.append(spark, Seq((5, 6)).toDF("id", "url"), ab)
     }
     // appended files land in their buckets: a url self-join stays exchange-free
     val t = spark.table("ab_t")
@@ -239,11 +301,11 @@ class ResumeSpec extends SparkSpecBase {
   }
 
   test("append aligns column order to the existing table") {
-    val root = tmp() + "/t2"
-    Tables.appendWithSchemaCheck(spark, Seq((1, "a")).toDF("id", "v"), root)
-    Tables.appendWithSchemaCheck(spark,
-      Seq(("b", 2)).toDF("v", "id"), root) // reversed order, same names/types
-    val got = spark.read.parquet(root).orderBy("id")
+    val t = Tables.ParquetTable(tmp() + "/t2")
+    Tables.append(spark, Seq((1, "a")).toDF("id", "v"), t)
+    Tables.append(spark,
+      Seq(("b", 2)).toDF("v", "id"), t) // reversed order, same names/types
+    val got = spark.read.parquet(t.path).orderBy("id")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(got == Seq((1, "a"), (2, "b")))
   }
