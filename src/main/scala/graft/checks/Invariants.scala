@@ -38,7 +38,7 @@ object Invariants {
 
   /** The cross-run invariant pass: compute FNV-64 digests for the batch,
     * compare against the stored FIRST-SEEN digest per url (a url's digest
-    * must NEVER change, so the original is the contract), return the
+    * must NEVER change, so the original is the contract), append the
     * violation rows in the standard shape, and append digests for urls
     * not seen before.
     *
@@ -86,40 +86,39 @@ object Invariants {
         concat(col("digest_prev"), lit("->"), col("digest")).as("detail"),
         lit("processing").as("stage"))
 
-  /** Compare `batch` against the digest `store` and append the urls it
-    * has not seen. The store is either kind of [[graft.io.Tables.Table]]:
-    * a bucketed store read by a url-bucketed batch runs the compare join
-    * AND the append-if-absent anti join with zero exchanges (both
-    * merge-hinted through [[graft.io.Tables.keyJoinSide]]), so the
-    * cross-run invariant never re-shuffles the fact table.
+  /** Compare `batch` against the digest `store`, append the violation
+    * rows to the `violations` table, then append the urls the store has
+    * not seen. The violations are written BEFORE the new urls: the write
+    * itself computes the compare against the store as it was, so
+    * nothing has to be cached. A store that does not exist yet is
+    * created from the batch, and nothing is appended to `violations` —
+    * there is nothing to contradict.
     *
-    * LIFETIME CONTRACT: the returned violations DataFrame is PERSISTED
-    * (it must materialize before the new-digest append below mutates the
-    * store it reads) — the caller unpersists after consuming it, or a
-    * long-lived session leaks one cached DataFrame per run.
+    * The store is either kind of [[graft.io.Tables.Table]]: a bucketed
+    * store read by a url-bucketed batch runs the compare join AND the
+    * append-if-absent anti join with zero exchanges (both merge-hinted
+    * through [[graft.io.Tables.keyJoinSide]]), so the cross-run
+    * invariant never re-shuffles the fact table.
     */
   def checkAndStoreDigests(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-                           store: graft.io.Tables.Table, runId: String): DataFrame = {
+                           store: graft.io.Tables.Table, violations: graft.io.Tables.Table,
+                           runId: String): Unit = {
     import graft.io.Tables
     val cur = canonicalDigests(batch)
     if (!Tables.exists(spark, store)) {
       Tables.append(spark, cur.withColumn("run_id", lit(runId)), store)
-      return cur.limit(0).select(col("part"), col("url"),
-        lit("text_digest").as("check_name"), lit("").as("detail"),
-        lit("processing").as("stage")).withColumn("run_id", lit(runId))
+      return
     }
     // one row per url by construction — no distinct() over history needed
     val curSide = Tables.keyJoinSide(store, cur)
     val prev = Tables.keyJoinSide(store, Tables.read(spark, store)
       .select(col("url"), col("digest").as("digest_prev")))
-    val out = digestViolationsAgainst(curSide, prev)
-      .withColumn("run_id", lit(runId)).persist()
-    out.count() // materialize BEFORE appending new digests below
+    Tables.append(spark, digestViolationsAgainst(curSide, prev)
+      .withColumn("run_id", lit(runId)), violations)
     val newUrls = curSide
       .join(Tables.keyJoinSide(store, prev.select(col("url"))), Seq("url"), "left_anti")
     Tables.append(spark,
       newUrls.select(col("part"), col("url"), col("digest"))
         .withColumn("run_id", lit(runId)), store)
-    out
   }
 }

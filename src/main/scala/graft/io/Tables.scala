@@ -1,6 +1,9 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Minimal Iceberg-style table layer over partitioned Parquet.
   *
@@ -21,8 +24,55 @@ object Tables {
     fs.exists(path)
   }
 
+  /** A parquet table read with its [[schema]]: no schema-inference job. */
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(root)
+    spark.read.schema(schema(spark, root)).parquet(root)
+
+  /** The Spark schema of the parquet table at `root` (a directory of
+    * data files, or one file), read on the Spark driver from ONE data file's
+    * footer — the file `spark.read.parquet` would infer from (no summary
+    * files, no schema merging), without the Spark job that inference
+    * runs. The schema Spark wrote into the footer's key-value metadata
+    * wins; a footer without it (another writer) is converted under the
+    * session's parquet settings. Every field reads as nullable, as in
+    * `spark.read.parquet(root).schema`.
+    */
+  def schema(spark: SparkSession, root: String): StructType = {
+    import org.apache.parquet.ParquetReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(root)
+    val fs = path.getFileSystem(conf)
+    val file = if (!fs.getFileStatus(path).isDirectory) path else fs.listStatus(path)
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.getName).headOption
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $root"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      ParquetReadOptions.builder()
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val meta = try reader.getFileMetaData finally reader.close()
+    val written = Option(meta.getKeyValueMetaData.get(SparkSchemaKey))
+      .map(DataType.fromJson).collect { case s: StructType => s }
+    asNullable(written.getOrElse(
+      new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema)))
+      .asInstanceOf[StructType]
+  }
+
+  /** Footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 
   /** Write a table hash-BUCKETED by `bucketCol` (sorted within buckets) —
     * the storage layout that amortizes the url shuffle: pay one
@@ -157,6 +207,8 @@ object Tables {
     * (io.py:381-387): the incoming schema must not introduce columns the
     * table doesn't already have; missing columns are an error too (strict
     * by-name match, order-insensitive, like Iceberg's write contract).
+    * The existing header comes from the catalog (bucketed) or one
+    * footer ([[schema]]), so the check runs no Spark job.
     * The first append creates the table. A bucketed table is appended
     * THROUGH the catalog so every appended file lands in its url-hash
     * bucket (a plain parquet append would break the layout — Spark

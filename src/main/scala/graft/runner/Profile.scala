@@ -1,6 +1,6 @@
 package graft.runner
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.constraints.{Constraint, Constraints}
@@ -53,18 +53,42 @@ object Profile {
                      columns: Seq[String], checked: Boolean = false,
                      rsd: Double = 0.05): DataFrame = {
     val compiled = Constraints.compile(suite)
-    val extra: String => Seq[org.apache.spark.sql.Column] =
+    val extra: String => Seq[Column] =
       if (checked) Stats.checkedAgg(rsd) else Stats.distinctAgg(exact = false)
-    val aggs = Runner.verdictAggs(compiled) ++ Stats.statAggs(columns, extra) :+
-      count(lit(1)).as("row_count")
-    pages.groupBy(col("part")).agg(aggs.head, aggs.tail: _*)
+    perPart(pages, Runner.verdictAggs(compiled) ++ Stats.statAggs(columns, extra))
+  }
+
+  /** The per-part aggregate of one [[ValidationRun]] batch: the
+    * production [[fusedAggregate]] columns, the batch's valid-url count
+    * per part ([[ValidUrls]], the row count of the url checks' verdict
+    * grid) and the [[Stats.log2Bucket]] histogram of `lengthOf` as one
+    * conditional count per bin — every output of the pass that is a
+    * per-part fold, in ONE aggregate over ONE scan. The bucket is
+    * projected once below the aggregate, not per bin.
+    */
+  def batchAggregate(pages: DataFrame, suite: Seq[Constraint], columns: Seq[String],
+                     lengthOf: String): DataFrame = {
+    val bucket = "__len_bucket"
+    perPart(pages.withColumn(bucket, Stats.log2Bucket(length(col(lengthOf)))),
+      Runner.verdictAggs(Constraints.compile(suite)) ++
+        Stats.statAggs(columns, Stats.distinctAgg(exact = false)) ++
+        Stats.lengthBinAggs(col(bucket)) :+
+        sum(when(Constraints.validUrl, 1L).otherwise(0L)).as(ValidUrls))
+  }
+
+  /** Column of [[batchAggregate]] counting the rows whose url is valid. */
+  val ValidUrls = "valid_urls"
+
+  private def perPart(pages: DataFrame, aggs: Seq[Column]): DataFrame = {
+    val all = aggs :+ count(lit(1)).as("row_count")
+    pages.groupBy(col("part")).agg(all.head, all.tail: _*)
   }
 
   /** The verdict-grid half, row-identical to `Runner.verdicts(pages,
     * suite)` when `agg` came from [[fusedAggregate]] over the same input.
     */
   def verdictRows(agg: DataFrame, suite: Seq[Constraint]): DataFrame =
-    Runner.verdictRowsFromAgg(agg, Constraints.compile(suite))
+    Runner.verdictRowsFromAgg(agg, suite.map(_.name))
 
   /** The stats half, row-identical to `Stats.columnStats(pages,
     * columns)`; requires `agg` built with `checked = false`.

@@ -63,21 +63,21 @@ object Runner {
   }
 
   /** Per-constraint violation-count aggregate columns — the map-side
-    * half of [[verdicts]], exposed so [[Profile]] can fuse them into a
-    * wider single-pass aggregate without duplicating the expressions.
+    * half of [[verdicts]]; [[Profile]] folds them into its per-part
+    * aggregates, so every verdict grid runs the same expressions.
     */
   private[graft] def verdictAggs(compiled: Seq[RowConstraint]): Seq[Column] =
     compiled.map(c =>
       sum(when(c.violated, 1L).otherwise(0L)).as(s"v_${c.name}"))
 
-  /** Explode a per-part aggregate frame (carrying the [[verdictAggs]]
-    * columns plus `row_count`) into the dense verdict grid shape.
+  /** Explode a per-part aggregate frame (carrying a `v_<check>`
+    * violation count per check name, as [[verdictAggs]] names them, plus
+    * `row_count`) into the dense verdict grid shape.
     */
-  private[graft] def verdictRowsFromAgg(g: DataFrame,
-                                        compiled: Seq[RowConstraint]): DataFrame = {
-    val entries = array(compiled.map(c => struct(
-      lit(c.name).as("check_name"),
-      col(s"v_${c.name}").as("violation_count"))): _*)
+  private[graft] def verdictRowsFromAgg(g: DataFrame, checks: Seq[String]): DataFrame = {
+    val entries = array(checks.map(c => struct(
+      lit(c).as("check_name"),
+      col(s"v_$c").as("violation_count"))): _*)
     g.select(col("part"), col("row_count"), explode(entries).as("e"))
       .select(
         col("part"),
@@ -88,13 +88,10 @@ object Runner {
   }
 
   /** Per-(partition, constraint) verdict grid: one aggregate pass with
-    * map-side combine; the grid is dense (every constraint appears for
-    * every partition, passing or not).
+    * map-side combine ([[Profile.fusedAggregate]] without stats
+    * columns); the grid is dense (every constraint appears for every
+    * partition, passing or not).
     */
-  def verdicts(pages: DataFrame, suite: Seq[Constraint]): DataFrame = {
-    val compiled = Constraints.compile(suite)
-    val aggs = verdictAggs(compiled) :+ count(lit(1)).as("row_count")
-    val g = pages.groupBy(col("part")).agg(aggs.head, aggs.tail: _*)
-    verdictRowsFromAgg(g, compiled)
-  }
+  def verdicts(pages: DataFrame, suite: Seq[Constraint]): DataFrame =
+    Profile.verdictRows(Profile.fusedAggregate(pages, suite, Nil), suite)
 }

@@ -1,8 +1,11 @@
 package graft.runner
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.checks.Invariants
 import graft.ckpt.Checkpoint
 import graft.constraints.Constraint
 import graft.io.Tables
@@ -76,6 +79,14 @@ object ValidationRun {
     pass(spark, pages, suite, root, runId, Layout.Bucketed(lineage, buckets))
 
   private val StatsColumns = Seq("url", "lang")
+  private val UrlChecks = Seq("url_unique", "url_lineage")
+
+  /** Most table partitions one batch may hold. The pass collects one
+    * aggregate row per table partition to the Spark driver; a batch past this
+    * bound fails before anything is written — resume it in smaller
+    * batches (filter `part` on the input).
+    */
+  val MaxBatchParts = 4096
 
   /** The one validation pass; `layout` decides whether the batch is
     * cached, whether the url checks run and where the digest store lives.
@@ -85,11 +96,9 @@ object ValidationRun {
     val manifest = Checkpoint.state(spark, root)
     val todo = if (manifest.done.isEmpty) pages
       else pages.filter(!col("part").isin(manifest.done.toSeq.sorted: _*))
-    val parts = todo.select("part").distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (parts.isEmpty) return Report(runId, manifest.latest, Nil, 0L)
 
-    // Plain caches the batch: violations, verdicts and stats share one
-    // scan. Bucketed does not: each output pass re-scans the bucketed
+    // Plain caches the batch: the aggregate, violations and digests share
+    // one scan. Bucketed does not: each of those re-scans the bucketed
     // table with pruned columns — cheaper than dragging text+html through
     // a deserialized cache, and a cache would hide the storage
     // distribution the pass exists to exploit (ScalingBench note).
@@ -102,26 +111,35 @@ object ValidationRun {
     def stamp(df: DataFrame): DataFrame = df.withColumn("run_id", lit(runId))
     def append(df: DataFrame, path: String): Unit =
       Tables.append(spark, df, Tables.ParquetTable(path))
+    // the derived tables: one file per table and batch
+    def appendLocal(df: DataFrame, path: String): Unit = append(df.coalesce(1), path)
     try {
+      // Every per-part fold of the pass — row verdicts, stats, length
+      // histogram, lineage counts, the url checks' row counts — comes
+      // from ONE aggregate over ONE scan, collected once (the reference
+      // validates and counts in the same read loop, io.py:894-907 feeding
+      // io.py:484-545). The tables below are derived from these rows.
+      val agg = Profile.batchAggregate(batch, suite, StatsColumns, "text")
+      val perPart = agg.limit(MaxBatchParts + 1).collect().toSeq.sortBy(_.getAs[Int]("part"))
+      require(perPart.length <= MaxBatchParts,
+        s"batch holds more than $MaxBatchParts table partitions; run it in smaller batches")
+      if (perPart.isEmpty) return Report(runId, manifest.latest, Nil, 0L)
+      val parts = perPart.map(_.getAs[Int]("part"))
+      val local = spark.createDataFrame(perPart.asJava, agg.schema)
+
       append(stamp(Runner.violations(batch, suite, Seq("url"))), violationsPath(root))
-      val rowVerdicts = Runner.verdicts(batch, suite)
-      append(stamp(urlLineage.fold(rowVerdicts)(lineage =>
-        rowVerdicts.unionByName(urlCheckVerdicts(spark, batch, lineage, root, runId)))),
+      val rowVerdicts = Profile.verdictRows(local, suite)
+      appendLocal(stamp(urlLineage.fold(rowVerdicts)(lineage =>
+        rowVerdicts.unionByName(urlCheckVerdicts(spark, batch, lineage, root, runId, local, parts)))),
         verdictsPath(root))
-      append(stamp(Stats.columnStats(batch, StatsColumns)), metricsPath(root))
-      append(stamp(Stats.lengthHistogram(batch, "text")), s"$root/len_hist")
+      appendLocal(stamp(Profile.statRows(local, StatsColumns)), metricsPath(root))
+      appendLocal(stamp(Stats.lengthHistRowsFromAgg(local)), s"$root/len_hist")
 
       // cross-run row invariant: byte-identical text per url
       // (BASELINE.json::input_hint); changed digests append to the same
-      // violations table as the row constraints. digViol comes back
-      // persisted (materialized before the digest append); release its
-      // blocks once consumed or a long-lived session leaks one cached
-      // DataFrame per run
-      val digViol = graft.checks.Invariants.checkAndStoreDigests(spark, batch, digests, runId)
-      try append(digViol, violationsPath(root))
-      finally digViol.unpersist()
-
-      val rows = batch.count()
+      // violations table as the row constraints
+      Invariants.checkAndStoreDigests(spark, batch, digests,
+        Tables.ParquetTable(violationsPath(root)), runId)
 
       // per-partition lineage rows (north rule): which run + snapshot
       // processed which partition, with its row count — the audit trail a
@@ -130,41 +148,46 @@ object ValidationRun {
       // failed attempt, not (as commit-first would) the audit trail of a
       // batch the manifest says is done.
       val snap = manifest.next
-      append(stamp(batch.groupBy(col("part")).agg(count(lit(1)).as("row_count")))
+      appendLocal(stamp(local.select(col("part"), col("row_count")))
         .withColumn("snapshot_id", lit(snap))
         .withColumn("committed_at", current_timestamp()), lineagePath(root))
       Checkpoint.commit(spark, root, runId, parts, snap)
 
-      Report(runId, snap, parts, rows)
+      Report(runId, snap, parts, perPart.map(_.getAs[Long]("row_count")).sum)
     } finally if (cache) batch.unpersist()
   }
 
   /** The url-keyed dataset checks of a bucketed pass: appends their
-    * violation rows to `url_violations` and returns their verdicts.
+    * violation rows to `url_violations` and returns their verdicts for
+    * `parts`, whose [[Profile.batchAggregate]] rows are `agg`.
     * Only well-formed urls participate — the malformed ones are the row
     * suite's finding, and they'd all "dangle" as noise here.
     */
   private def urlCheckVerdicts(spark: SparkSession, batch: DataFrame, lineage: DataFrame,
-                               root: String, runId: String): DataFrame = {
+                               root: String, runId: String, agg: DataFrame,
+                               parts: Seq[Int]): DataFrame = {
     import graft.checks.DatasetChecks
     import graft.constraints.Constraints.validUrl
     val ord = struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
       (-col("doc_id")).as("negid"))
     Tables.append(spark, DatasetChecks.urlChecksColocated(batch.filter(validUrl), lineage, ord)
       .withColumn("run_id", lit(runId)), Tables.ParquetTable(urlViolationsPath(root)))
-    // count over the batch (conditional sum), not over the valid urls: a
-    // partition whose urls are ALL malformed would otherwise have no
-    // part-count row, and the url checks would be silently ABSENT from
-    // its verdict grid instead of present as passed-with-0-checked-rows —
-    // the dense per-(part, check) grid is the contract (DatasetChecks
-    // scaladoc)
-    val pc = batch.groupBy(col("part")).agg(
-      sum(when(validUrl, 1L).otherwise(0L)).as("row_count"))
-    DatasetChecks.verdictsFromViolations(
-      spark.read.parquet(urlViolationsPath(root))
-        .filter(col("run_id") === runId)
-        .dropDuplicates("run_id", "part", "doc_id", "check_name"),
-      pc, Seq("url_unique", "url_lineage"))
+    val found = Tables.read(spark, urlViolationsPath(root))
+      .filter(col("run_id") === runId && col("part").isin(parts: _*))
+      .dropDuplicates("run_id", "part", "doc_id", "check_name")
+      .groupBy(col("check_name"), col("part")).count()
+      .collect().groupMap(_.getString(0))(r => r.getInt(1) -> r.getLong(2))
+    // every part of the batch gets both checks, with its valid-url count
+    // as their row count: a partition whose urls are ALL malformed has no
+    // violation rows and still gets its url checks, passed with 0
+    // checked rows — the dense per-(part, check) grid is the contract
+    // (DatasetChecks scaladoc)
+    val counts = UrlChecks.map { c =>
+      val byPart = typedLit(found.getOrElse(c, Array.empty[(Int, Long)]).toMap)
+      coalesce(byPart(col("part")), lit(0L)).as(s"v_$c")
+    }
+    Runner.verdictRowsFromAgg(
+      agg.select(col("part") +: col(Profile.ValidUrls).as("row_count") +: counts: _*), UrlChecks)
   }
 
   /** Catalog name for a root's bucketed digest store. MD5 of the root,

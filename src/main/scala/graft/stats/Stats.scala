@@ -199,6 +199,28 @@ object Stats {
     df.groupBy(col("part"), log2Bucket(length(col(column))).as("bucket"))
       .agg(count(lit(1)).as("n"))
 
+  /** The buckets [[log2Bucket]] gives a string length: `length` is an
+    * `Int`, so 0..30.
+    */
+  private val LengthBins = 0 to 30
+
+  /** [[lengthHistogram]] as per-part aggregate columns, one conditional
+    * count per bin of the precomputed `bucket` — the half that rides in
+    * [[graft.runner.Profile.batchAggregate]].
+    */
+  private[graft] def lengthBinAggs(bucket: Column): Seq[Column] =
+    LengthBins.map(b => count(when(bucket === b, true)).as(s"len_$b"))
+
+  /** The (part, bucket, n) rows of a [[lengthBinAggs]] frame, keeping the
+    * bins with n > 0 — row-identical to [[lengthHistogram]] over the
+    * same input.
+    */
+  private[graft] def lengthHistRowsFromAgg(g: DataFrame): DataFrame =
+    g.select(col("part"), explode(array(LengthBins.map(b => struct(
+        lit(b.toLong).as("bucket"), col(s"len_$b").as("n"))): _*)).as("e"))
+      .filter(col("e.n") > 0L)
+      .select(col("part"), col("e.bucket").as("bucket"), col("e.n").as("n"))
+
   /** floor(log2(max(x, 1))) via binary-string length: exact for all x. */
   def log2Bucket(x: Column): Column =
     (length(bin(greatest(x, lit(1)).cast("long"))) - 1).cast("long")

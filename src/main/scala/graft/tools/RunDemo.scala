@@ -43,8 +43,11 @@ object RunDemo {
         .otherwise(col("text")))
     val nTampered = tampered.filter(col("doc_id") % 113 === 44 &&
       col("url").isNotNull && col("text") =!= "").count()
-    val dv = graft.checks.Invariants.checkAndStoreDigests(spark, tampered,
-      Tables.ParquetTable(ValidationRun.digestsPath(root)), "run-3")
+    graft.checks.Invariants.checkAndStoreDigests(spark, tampered,
+      Tables.ParquetTable(ValidationRun.digestsPath(root)),
+      Tables.ParquetTable(ValidationRun.violationsPath(root)), "run-3")
+    val dv = Tables.read(spark, ValidationRun.violationsPath(root))
+      .filter(col("run_id") === "run-3")
     println(s"[demo] digest-invariant violations after tamper=${dv.count()} (tampered rows=$nTampered)")
     spark.stop()
   }

@@ -18,6 +18,9 @@ class ResumeSpec extends SparkSpecBase {
   lazy val pages = Derive.webPages(spark, "/root/testdata/sf0.001")
 
   private def digestStore(root: String) = Tables.ParquetTable(ValidationRun.digestsPath(root))
+  private def violationTable(root: String) = Tables.ParquetTable(ValidationRun.violationsPath(root))
+  private def runViolations(root: String, runId: String) =
+    spark.read.parquet(ValidationRun.violationsPath(root)).filter(col("run_id") === runId)
 
   private def verdictSet(root: String): Set[String] =
     ValidationRun.currentVerdicts(spark, root)
@@ -46,9 +49,9 @@ class ResumeSpec extends SparkSpecBase {
     val mutated = pages.withColumn("text",
       when(col("doc_id") % 113 === 44, concat(col("text"), lit(" tampered")))
         .otherwise(col("text")))
-    val viol = graft.checks.Invariants
-      .checkAndStoreDigests(spark, mutated, digestStore(root), "r2")
-    val changed = viol.collect()
+    graft.checks.Invariants
+      .checkAndStoreDigests(spark, mutated, digestStore(root), violationTable(root), "r2")
+    val changed = runViolations(root, "r2").collect()
     assert(changed.nonEmpty && changed.forall(_.getString(2) == "text_digest"))
     // every flagged row is one of the tampered urls
     val tamperedUrls = mutated.filter(col("doc_id") % 113 === 44 && col("url").isNotNull)
@@ -60,7 +63,8 @@ class ResumeSpec extends SparkSpecBase {
     val root = tmp()
     val urls = pages.filter(col("url").isNotNull).select("url").distinct().count()
     (1 to 5).foreach { i =>
-      graft.checks.Invariants.checkAndStoreDigests(spark, pages, digestStore(root), s"r$i")
+      graft.checks.Invariants.checkAndStoreDigests(spark, pages, digestStore(root),
+        violationTable(root), s"r$i")
     }
     val stored = spark.read.parquet(s"$root/digests")
     assert(stored.count() == urls,
@@ -69,8 +73,9 @@ class ResumeSpec extends SparkSpecBase {
     // first-seen digest is the contract: a later run's mutation both
     // reports a violation AND leaves the stored canonical untouched
     val mutated = pages.withColumn("text", concat(col("text"), lit(" zz")))
-    val viol = graft.checks.Invariants.checkAndStoreDigests(spark, mutated, digestStore(root), "r6")
-    assert(viol.count() > 0)
+    graft.checks.Invariants.checkAndStoreDigests(spark, mutated, digestStore(root),
+      violationTable(root), "r6")
+    assert(runViolations(root, "r6").count() > 0)
     assert(spark.read.parquet(s"$root/digests").count() == urls)
   }
 
