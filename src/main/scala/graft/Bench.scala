@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr, xxhash64}
+
+import graft.bench.BenchUtil
 
 /** Driver-run benchmark: one JSON line with per-query wall seconds over
   * SPARK_GRAFT_SF_DIR. Each query gets one untimed warm-up execution
@@ -36,17 +38,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold",
-        graft.sim.BucketBudget.DefaultCap.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE pinned, not left to Spark's default: a site's spark-defaults
+    // cannot switch it off under the published total
+    val spark = BenchUtil.session(BenchUtil.envCpus, "graft-bench",
+      extraConf = Map("spark.sql.adaptive.enabled" -> "true"))
     val names = SparkEntry.queries.keys.toSeq.sorted
     // a broken query must NOT be published as a near-zero time (the
     // bench would silently IMPROVE when the suite breaks): failures are

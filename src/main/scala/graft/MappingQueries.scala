@@ -28,10 +28,8 @@ object MappingQueries {
 
   /** Canonical field layout of the mappings table (subset of
     * Canonical.FieldOrder; single-valued author/reviewer lists).
-    * `private[graft]`: HashBench measures record-identity throughput
-    * over THIS layout — a copy there would silently drift.
     */
-  private[graft] def mappingFields: Seq[Field] = Seq(
+  private def mappingFields: Seq[Field] = Seq(
     Field("subject_id", col("subject_id"), FmtUri),
     Field("subject_label", col("subject_label"), FmtStr),
     Field("predicate_id", col("predicate_id"), FmtUri),

@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   * different setups:
   *   - [[median]] — the dispersion-robust central tendency every
   *     evidence table reports;
-  *   - [[session]] — fresh local[cpus] session (AQE on by default:
-  *     the production configuration; a bench that turns it off must say
-  *     why at the call site);
+  *   - [[session]] — fresh local[cpus] session, the one builder every
+  *     main uses (AQE is Spark's default, on: the production
+  *     configuration; a bench that turns it off must say why at the
+  *     call site);
+  *   - [[hostCpus]] / [[envCpus]] — the core counts mains size to;
   *   - [[syntheticLineage]] — the deterministic 5/6 fetch-record rule
   *     (doc urls with hash % 6 == 5 dangle) that the RI checks in
   *     ScalingBench/BucketBench/SkewBench must all share, or their
@@ -23,7 +25,15 @@ object BenchUtil {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  def session(cpus: Int, appName: String, adaptive: Boolean = true,
+  /** Cores of this host, as the JVM sees them. */
+  def hostCpus: Int = Runtime.getRuntime.availableProcessors
+
+  /** Cores a driver-run main sizes its session to: `SPARK_GRAFT_CPUS`,
+    * else the host's.
+    */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(hostCpus)(_.toInt)
+
+  def session(cpus: Int, appName: String,
               extraConf: Map[String, String] = Map.empty): SparkSession = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
@@ -32,7 +42,6 @@ object BenchUtil {
       .master(s"local[$cpus]")
       .appName(s"$appName-$cpus")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", adaptive.toString)
       .config("spark.sql.optimizer.windowGroupLimitThreshold",
         graft.sim.BucketBudget.DefaultCap.toString)
       .config("spark.sql.session.timeZone", "UTC")

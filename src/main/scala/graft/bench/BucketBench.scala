@@ -26,7 +26,8 @@ object BucketBench {
     val n = if (args.length > 0) args(0).toLong else 4000000L
     val outMd = if (args.length > 1) args(1) else "BENCH/BASELINE.md"
     val buckets = if (args.length > 2) args(2).toInt else 32
-    val spark = BenchUtil.session(32, "graft-bucketbench")
+    val cpus = BenchUtil.hostCpus
+    val spark = BenchUtil.session(cpus, "graft-bucketbench")
 
     val plainPages = s"/tmp/graft_bucket_pages_$n"
     val plainLineage = s"/tmp/graft_bucket_lineage_$n"
@@ -84,7 +85,7 @@ object BucketBench {
 
     val md =
       s"""
-         |## Bucketed-layout payoff (uniqueness + RI over $n pages, local[32])
+         |## Bucketed-layout payoff (uniqueness + RI over $n pages, local[$cpus])
          |
          |The same url-keyed dataset checks (arg-max uniqueness dedup + lineage
          |RI anti join, $rPlain violation rows both ways), round-robin

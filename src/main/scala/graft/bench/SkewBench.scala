@@ -51,7 +51,8 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 4000000L
     val outMd = if (args.length > 1) args(1) else "BENCH/BASELINE.md"
-    val spark = BenchUtil.session(32, "graft-skewbench",
+    val cpus = BenchUtil.hostCpus
+    val spark = BenchUtil.session(cpus, "graft-skewbench",
       extraConf = Map("spark.sql.adaptive.skewJoin.enabled" -> "true"))
 
     val dataPath = s"/tmp/graft_skew_pages_$n"
@@ -98,7 +99,7 @@ object SkewBench {
          |## Hot-key skew (north rule: salted dedup for hot domains)
          |
          |Dedup of $n pages where ONE url holds ~10% of all rows (WebGen
-         |skew mode), local[32], AQE + skew-join enabled. Timing: 3
+         |skew mode), local[$cpus], AQE + skew-join enabled. Timing: 3
          |interleaved round-robin rounds after an untimed warm-up round
          |(a noisy host window hits every strategy of a round equally);
          |median per strategy. All strategies returned identical key

@@ -20,9 +20,9 @@ import graft.stats.Stats
   * second scheduling round. Fusing the two aggregate families into one
   * `groupBy(part)` keeps the single partial+final hash-aggregate shape
   * of each half (map-side combine reduces each task to |parts| counter
-  * rows), adds zero exchanges, and — measured by [[graft.bench
-  * .SuiteTrace]] — removes the worst-scaling component of the
-  * validation suite entirely (the stand-alone pruned stats scan is
+  * rows), adds zero exchanges, and — measured by the round-5 per-component
+  * suite trace (BENCH/BASELINE.md) — removes the worst-scaling component
+  * of the validation suite entirely (the stand-alone pruned stats scan is
   * latency- not throughput-bound, so it scales worst of all sub-plans).
   *
   * The aggregate and derivation expressions are THE SAME code the

@@ -101,7 +101,7 @@ object ValidationRun {
     // one scan. Bucketed does not: each of those re-scans the bucketed
     // table with pruned columns — cheaper than dragging text+html through
     // a deserialized cache, and a cache would hide the storage
-    // distribution the pass exists to exploit (ScalingBench note).
+    // distribution the pass exists to exploit.
     val (cache, urlLineage, digests) = layout match {
       case Layout.Plain => (true, None, Tables.ParquetTable(digestsPath(root)))
       case Layout.Bucketed(lineage, buckets) => (false, Some(lineage),

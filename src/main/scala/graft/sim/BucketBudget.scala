@@ -79,13 +79,12 @@ object BucketBudget {
     * truncation decision on every engine and every run — a sampled gate
     * could flip between value-identical and truncated results.
     *
-    * Override knob: spark conf `graft.sim.capGate` = `auto` (default —
-    * the exact pre-pass) | `always` (skip the pre-pass and run the
-    * unconditional window, i.e. the round-4 plan). `always` exists for
-    * two callers: TimeCap's attribution runs (measure the window cost
-    * without forking the repo) and operators who KNOW the corpus is
-    * adversarial (boilerplate-dominated crawl) and would rather not pay
-    * the pre-pass before a cap that will certainly fire.
+    * Override knob: spark conf `graft.sim.capGate` = `always` skips the
+    * pre-pass and runs the unconditional window (the round-4 plan); any
+    * other value, unset included, is the exact pre-pass. `always` is for
+    * operators who KNOW the corpus is adversarial (boilerplate-dominated
+    * crawl) and would rather not pay the pre-pass before a cap that will
+    * certainly fire.
     *
     * Eagerness: this runs one Spark job at PLAN CONSTRUCTION time. All
     * three call sites sit above a persisted upstream frame (the minhash
@@ -101,16 +100,17 @@ object BucketBudget {
       cap(keys, groupCols, idCol, capN)
     // persist the slim banded-key table on the INACTIVE path (round-5
     // verdict finding #2, adjusted by r06 measurement): uncached, the
-    // gate's count pre-pass evaluated the banding once and the pair
-    // self-join re-derived it on each side — persisting lets both join
-    // sides read the keys the pre-pass already computed (measured
-    // −0.15–0.3 s on each of sim_minhash_lsh / emb_neardup /
+    // pair self-join re-derived the banding on each side. The persist
+    // comes AFTER the pre-pass count, so the pre-pass does not fill the
+    // cache: the first join side fills it and the second reads it
+    // (measured −0.15–0.3 s on each of sim_minhash_lsh / emb_neardup /
     // emb_neardup_multi at sf0.1). The ACTIVE path deliberately stays
     // unpersisted: the capped window feeds both join sides through ONE
     // ReusedExchange already (a single window evaluation), so caching
     // the pre-window keys only adds the cache build — measured +0.2 s
-    // on sim_lsh_budget when persisted. Lifetime contract unchanged:
-    // callers clearCache/unpersist after materializing the result.
+    // on sim_lsh_budget when persisted. Lifetime: this cache is created
+    // here, and callers that keep only their own frames have no handle
+    // to unpersist it — only `spark.catalog.clearCache()` releases it.
     else if (truncationReport(keys, groupCols, capN).isEmpty) {
       // no-op when the caller already persisted this exact frame
       // (simhashPairs hands its persisted banded base straight in)

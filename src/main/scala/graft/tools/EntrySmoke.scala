@@ -1,19 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.bench.BenchUtil
 
 /** Smoke-drives the driver contract exactly as the driver does:
   * `SparkEntry.entry(spark)` must return rows > 0 on sf0.001.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session(BenchUtil.envCpus, "graft-entry-smoke")
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     df.show(12, truncate = false)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.bench.BenchUtil
 
 /** Dumps formatted physical plans for the scale-critical queries so plan
   * regressions (lost pushdown, unexpected shuffle, broadcast→SMJ flips)
@@ -12,15 +12,7 @@ object PlanDump {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("verdicts", "violations", "dedup_url", "ri_dangling", "q1_agg",
         "q3_join", "emb_knn", "sim_minhash_lsh")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold",
-        graft.sim.BucketBudget.DefaultCap.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchUtil.session(BenchUtil.envCpus, "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,9 +1,9 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.bench.BenchUtil
 import graft.constraints.Constraints
 import graft.io.Tables
 import graft.runner.ValidationRun
@@ -15,11 +15,7 @@ import graft.runner.ValidationRun
 object RunDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session(BenchUtil.envCpus, "graft-rundemo")
     val root = Files.createTempDirectory("graft-demo").toString
     // WebGen: url-hash partitioned (required for resume-safe per-url
     // invariants; see Invariants.checkAndStoreDigests scaladoc)

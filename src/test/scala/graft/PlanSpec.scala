@@ -284,6 +284,8 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("signature-only queries spread the unsplittable scan round-robin; at scale they are shuffle-free") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    assume(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
     for (name <- Seq("sim_minhash_sig", "sim_simhash")) {
       val p = planOf(name)
       assert(p.contains("RoundRobinPartitioning"), s"$name must spread the one-split scan:\n$p")
