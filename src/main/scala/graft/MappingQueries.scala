@@ -69,7 +69,7 @@ object MappingQueries {
       else
         when(k % 17 === 4, lit("Not")).otherwise(lit(null).cast("string"))
     val sideSkip = if (parity == 0) k0 % 11 === 3 else k0 % 7 === 2
-    s.read.parquet(s"$dir/documents.parquet")
+    graft.io.Tables.read(s, s"$dir/documents.parquet")
       .filter(d % 2 === parity && !sideSkip)
       .select(
         concat(lit("ex"), k % 7, lit(":doc/"), k).as("subject_id"),
@@ -183,7 +183,7 @@ object MappingQueries {
     */
   private def mappingsSpread(s: SparkSession, dir: String): DataFrame =
     Derive.mappingsOf(graft.io.Scan.spread(
-      s.read.parquet(s"$dir/documents.parquet")))
+      graft.io.Tables.read(s, s"$dir/documents.parquet")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // canonical full-record S-expression + FNV-64 record identity
@@ -316,7 +316,7 @@ object MappingQueries {
     // reviewer blend applied post-aggregation (process.py:559-567)
     "conf_reviewer" -> ((s, dir) => {
       val agg = graft.agg.Confidence.aggregate(
-        s.read.parquet(s"$dir/events.parquet"),
+        graft.io.Tables.read(s, s"$dir/events.parquet"),
         Seq("event_type"), lit(1.0) / (lit(1.5) + col("value")),
         graft.agg.Confidence.Mean, negated = col("event_type") === "error")
       agg.select(col("event_type"),
@@ -374,7 +374,7 @@ object MappingQueries {
     // prefixes and colon-free values pass through
     "f_slots" -> ((s, dir) => {
       val d = col("doc_id")
-      val raw = s.read.parquet(s"$dir/documents.parquet").select(
+      val raw = graft.io.Tables.read(s, s"$dir/documents.parquet").select(
         d.as("mapping_id"),
         ((d * 13) % 100).cast("string").as("ext_score"),
         concat(lit("2026-02-"), lpad((d % 28 + 1).cast("string"), 2, "0"))
@@ -403,7 +403,7 @@ object MappingQueries {
     // independent reads that must agree (the twin transform below is
     // the lockstep pair, mirrored in the oracle's incoming CTE).
     "f_append_compat" -> ((s, dir) => {
-      val existing = s.read.parquet(s"$dir/documents.parquet")
+      val existing = graft.io.Tables.read(s, s"$dir/documents.parquet")
       val incoming = existing.drop("source")
         .withColumn("extra_score", lit(0.5))
         .withColumn("n_chars", col("n_chars").cast("string"))
@@ -416,7 +416,7 @@ object MappingQueries {
     // DESCRIBE of the same footer; the slot list and the core-column set
     // are LOCKSTEP literal pairs with the oracle (change both or neither)
     "f_slot_collision" -> ((s, dir) => {
-      val docsSchema = s.read.parquet(s"$dir/documents.parquet").schema
+      val docsSchema = graft.io.Tables.schema(s, s"$dir/documents.parquet")
       graft.schema.ExtensionSlots.declarationReport(s,
         Seq("doc_id", "lang", "html", "n_chars", "source", "quality_tier"),
         docsSchema)

@@ -143,7 +143,7 @@ object SparkEntry {
       Dedup.duplicateReport(validPages(Derive.webPages(s, dir)), col("url"))
         .withColumnRenamed("key", "url")),
     "dedup_exact" -> ((s, dir) =>
-      Dedup.exactByContent(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.exactByContent(graft.io.Tables.read(s, s"$dir/documents.parquet"),
         col("text"), col("doc_id"))),
 
     // ===== referential integrity (dangling lineage, left-anti) =====
@@ -214,17 +214,17 @@ object SparkEntry {
 
     // ===== set operations (VennSets, compare.py:338-354) =====
     "s_venn" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.io.Tables.read(s, s"$dir/documents.parquet")
       SetOps.vennCounts(docs.filter(col("lang") === "en"),
         docs.filter(col("source") === "src3"), "doc_id")
     }),
     "s_venn_split" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.io.Tables.read(s, s"$dir/documents.parquet")
       SetOps.vennSplit(docs.filter(col("lang") === "en"),
         docs.filter(col("source") === "src3"), "doc_id")
     }),
     "s_exclude" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.io.Tables.read(s, s"$dir/documents.parquet")
       SetOps.excludeByKey(docs, docs.filter(col("lang") === "zh"), col("doc_id"))
         .select("doc_id")
     }),
@@ -233,7 +233,7 @@ object SparkEntry {
     // deliberately different column sets; unionByName fills the gaps
     // with NULL, bag semantics preserved (mirrors UNION ALL BY NAME)
     "s_merge_sets" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.io.Tables.read(s, s"$dir/documents.parquet")
       SetOps.merge(Seq(
         docs.filter(col("source") === "src1")
           .select(col("doc_id"), col("lang"), lit("a").as("src_set")),
@@ -246,11 +246,11 @@ object SparkEntry {
 
     // ===== confidence aggregation algebra (process.py:472-568) =====
     "conf_mean" -> ((s, dir) =>
-      Confidence.aggregate(s.read.parquet(s"$dir/events.parquet"),
+      Confidence.aggregate(graft.io.Tables.read(s, s"$dir/events.parquet"),
         Seq("event_type"), lit(1.0) / (lit(1.5) + col("value")),
         Confidence.Mean, negated = col("event_type") === "error")),
     "conf_noisyor" -> ((s, dir) =>
-      Confidence.aggregate(s.read.parquet(s"$dir/events.parquet"),
+      Confidence.aggregate(graft.io.Tables.read(s, s"$dir/events.parquet"),
         Seq("event_type"), lit(1.0) / (lit(1.5) + col("value")),
         Confidence.Binomial, negated = col("event_type") === "error")),
 
@@ -266,16 +266,16 @@ object SparkEntry {
     }),
     "fmt_condense" -> ((s, dir) =>
       graft.io.Formatter.condensable(
-        s.read.parquet(s"$dir/documents.parquet").filter(col("source") === "src3"),
+        graft.io.Tables.read(s, s"$dir/documents.parquet").filter(col("source") === "src3"),
         Seq("lang", "source"))),
 
     // ===== scalar-function coverage: JSON, multivalued codec =====
     "f_json" -> ((s, dir) =>
-      s.read.parquet(s"$dir/events.parquet")
+      graft.io.Tables.read(s, s"$dir/events.parquet")
         .select(col("event_id"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))),
     "f_multivalued" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      graft.io.Tables.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), graft.text.TextOps.tokens(col("text")).as("__ws"))
         .select(col("doc_id"),
           array_join(slice(col("__ws"), 1, 3), "|").as("joined"),
@@ -283,7 +283,7 @@ object SparkEntry {
 
     // ===== group-merge (merge_manual_curations, process.py:999-1027) =====
     "agg_merge" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      graft.io.Tables.read(s, s"$dir/lineitem.parquet")
         .groupBy(col("l_orderkey"))
         .agg(
           array_join(array_sort(collect_set(col("l_returnflag"))), "|").as("flags"),
@@ -301,12 +301,12 @@ object SparkEntry {
     // ===== row mutations (curate pattern) + same-text normalization =====
     "mut_update" -> ((s, dir) =>
       graft.mutate.Mutations.conditionalUpdate(
-        s.read.parquet(s"$dir/events.parquet"),
+        graft.io.Tables.read(s, s"$dir/events.parquet"),
         col("event_type") === "error",
         Map("value" -> lit(0.0), "event_type" -> lit("curated")))
         .select(col("event_id"), col("event_type"), round(col("value"), 2).as("value"))),
     "f_normtext" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      graft.io.Tables.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"),
           md5(QueryDsl.normText(col("text"))).as("norm_md5"))),
 
@@ -318,7 +318,7 @@ object SparkEntry {
 
     // ===== symmetric canonical key (get_canonical_tuple, process.py:150-153) =====
     "agg_symmetric_key" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      graft.io.Tables.read(s, s"$dir/lineitem.parquet")
         .groupBy(
           least(col("l_partkey"), col("l_suppkey")).as("k1"),
           greatest(col("l_partkey"), col("l_suppkey")).as("k2"))
@@ -326,7 +326,7 @@ object SparkEntry {
 
     // ===== general relational coverage (TPC-H-ish) =====
     "q1_agg" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = graft.io.Tables.read(s, s"$dir/lineitem.parquet")
       li.filter(col("l_shipdate") < lit("1998-09-01"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -338,16 +338,18 @@ object SparkEntry {
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     }),
     "q3_join" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = graft.io.Tables.read(s, s"$dir/customer.parquet")
         .filter(col("c_mktsegment") === "BUILDING")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val ord = graft.io.Tables.read(s, s"$dir/orders.parquet")
         .filter(col("o_orderdate") < lit("1998-01-01"))
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = graft.io.Tables.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") > lit("1998-01-01"))
       li.join(broadcast(ord), col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderpriority"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+        // exact decimal sum: a double sum's rounding depends on the order of addition
+        .agg(round(sum(col("l_extendedprice").cast("decimal(12,2)") *
+          (lit(1) - col("l_discount").cast("decimal(12,2)"))), 2).cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey").asc)
         .limit(10)
     }),
@@ -355,7 +357,7 @@ object SparkEntry {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      s.read.parquet(s"$dir/orders.parquet")
+      graft.io.Tables.read(s, s"$dir/orders.parquet")
         .select(
           col("o_orderkey"),
           row_number().over(w).cast("long").as("rn"),
@@ -363,11 +365,11 @@ object SparkEntry {
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2).as("running_total"))
     }),
     "q_counts" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      graft.io.Tables.read(s, s"$dir/lineitem.parquet")
         .select(explode(array(col("l_partkey"), col("l_suppkey"))).as("entity"))
         .groupBy(col("entity")).agg(count(lit(1)).as("n"))),
     "q_count_unique" -> ((s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      graft.io.Tables.read(s, s"$dir/lineitem.parquet")
         .select(explode(array(col("l_partkey"), col("l_suppkey"))).as("entity"))
         .agg(countDistinct(col("entity")).as("n_unique")))
   )
@@ -720,7 +722,8 @@ object SparkEntry {
         |FROM ec GROUP BY event_type""".stripMargin,
     "q3_join" ->
       """SELECT l_orderkey, o_orderpriority,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
+        |    (1 - CAST(l_discount AS DECIMAL(12,2)))), 2) AS DOUBLE) AS revenue
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey

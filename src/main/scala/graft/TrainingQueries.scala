@@ -25,7 +25,7 @@ object TrainingQueries {
     * [[boilerplateCte]]; keep in lockstep.
     */
   private def boilerplateDocs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet").select(
+    graft.io.Tables.read(s, s"$dir/documents.parquet").select(
       col("doc_id"),
       concat(lit("shared boilerplate navigation text block number "),
         col("doc_id") % 40, lit(" end")).as("text"))
@@ -40,13 +40,13 @@ object TrainingQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ===== text analysis =====
     "t_tokens" -> ((s, dir) =>
-      TextOps.tokenCounts(s.read.parquet(s"$dir/documents.parquet"), "text")),
+      TextOps.tokenCounts(graft.io.Tables.read(s, s"$dir/documents.parquet"), "text")),
     "t_langid" -> ((s, dir) =>
-      TextOps.languageId(s.read.parquet(s"$dir/documents.parquet"), "text")),
+      TextOps.languageId(graft.io.Tables.read(s, s"$dir/documents.parquet"), "text")),
     "t_quality" -> ((s, dir) =>
-      TextOps.qualityScore(s.read.parquet(s"$dir/documents.parquet"), "text")),
+      TextOps.qualityScore(graft.io.Tables.read(s, s"$dir/documents.parquet"), "text")),
     "t_fingerprint" -> ((s, dir) =>
-      TextOps.fingerprints(s.read.parquet(s"$dir/documents.parquet"), "text")),
+      TextOps.fingerprints(graft.io.Tables.read(s, s"$dir/documents.parquet"), "text")),
 
     // ===== near-dup detection =====
     // (the exact all-pairs ngram-Jaccard baseline is a TEST ORACLE, not a
@@ -60,10 +60,10 @@ object TrainingQueries {
     // is the join cascade after the signature pass.
     "sim_minhash_sig" -> ((s, dir) =>
       Sim.minhashSignatures(
-        graft.io.Scan.spread(s.read.parquet(s"$dir/documents.parquet")),
+        graft.io.Scan.spread(graft.io.Tables.read(s, s"$dir/documents.parquet")),
         "doc_id", "text", n = 3, k = 8)),
     "sim_minhash_lsh" -> ((s, dir) =>
-      Sim.minhashLshPairs(s.read.parquet(s"$dir/documents.parquet"),
+      Sim.minhashLshPairs(graft.io.Tables.read(s, s"$dir/documents.parquet"),
         "doc_id", "text", n = 3, k = 8, rows = 2, threshold = 0.2)),
     // hot-bucket budget, ACTIVE: a planted boilerplate corpus (40 shared
     // texts) makes every band bucket oversized at cap=2, so the capped
@@ -77,7 +77,7 @@ object TrainingQueries {
       Sim.minhashLshTruncation(boilerplateDocs(s, dir),
         "doc_id", "text", n = 3, k = 8, rows = 2, bucketCap = 2)),
     "sim_simhash" -> ((s, dir) =>
-      Sim.simhash(graft.io.Scan.spread(s.read.parquet(s"$dir/documents.parquet")),
+      Sim.simhash(graft.io.Scan.spread(graft.io.Tables.read(s, s"$dir/documents.parquet")),
         "doc_id", "text")),
     // bounded-width spread (cores/4) below the SimHash pass: full-width
     // spread measured worse inside the cached pair pipelines (cache
@@ -86,34 +86,34 @@ object TrainingQueries {
     "sim_simhash_pairs" -> ((s, dir) =>
       Sim.simhashPairs(
         Sim.simhash(graft.io.Scan.spread(
-          s.read.parquet(s"$dir/documents.parquet"),
+          graft.io.Tables.read(s, s"$dir/documents.parquet"),
           math.max(2, s.sparkContext.defaultParallelism / 4)), "doc_id", "text"))),
 
     // ===== embedding similarity search =====
     "emb_knn" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.io.Tables.read(s, s"$dir/embeddings.parquet")
       Ann.bruteForceTopK(e, e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
     }),
     "emb_neardup" -> ((s, dir) =>
-      Ann.lshNearDupPairs(s.read.parquet(s"$dir/embeddings.parquet"),
+      Ann.lshNearDupPairs(graft.io.Tables.read(s, s"$dir/embeddings.parquet"),
         "vec_id", "embedding", dim = 64, threshold = 0.35)),
     "emb_neardup_multi" -> ((s, dir) =>
-      Ann.lshNearDupPairsMulti(s.read.parquet(s"$dir/embeddings.parquet"),
+      Ann.lshNearDupPairsMulti(graft.io.Tables.read(s, s"$dir/embeddings.parquet"),
         "vec_id", "embedding", dim = 64, threshold = 0.35)),
     "emb_lsh_buckets" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.io.Tables.read(s, s"$dir/embeddings.parquet")
       e.select(col("vec_id"),
         Ann.lshBucket(transform(col("embedding"), x => x.cast("double")), 64).as("bucket"))
     }),
     "emb_ann_topk" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.io.Tables.read(s, s"$dir/embeddings.parquet")
       Ann.lshTopK(e, e.filter(col("vec_id") < 5), "vec_id", "embedding", dim = 64, k = 5)
     }),
     // IVF twin of the LSH path: cell assignment is a row-local unrolled
     // argmax over the (driver-sized) centroid set; search probes the 2
     // nearest cells per query via a broadcast join — corpus never shuffles
     "emb_ivf_topk" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.io.Tables.read(s, s"$dir/embeddings.parquet")
       val cents = Ann.ivfCentroids(e, "vec_id", "embedding", stride = 31)
       Ann.ivfTopK(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
         cents, k = 5, nprobe = 2)
@@ -128,20 +128,20 @@ object TrainingQueries {
     "mm_decode" -> ((s, dir) =>
       Multimodal.decodeImageFeatures(s,
         Multimodal.withSyntheticPng(s,
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id")).toDF()),
+          graft.io.Tables.read(s, s"$dir/documents.parquet"), "doc_id")).toDF()),
     // deterministic PCM encoded to WAV then DECODED via javax.sound
     // (RIFF container + format parse are real); amplitude stats come
     // from the decoded samples — integers, so the oracle is exact
     "mm_audio" -> ((s, dir) =>
       Multimodal.decodeAudioFeatures(s,
         Multimodal.withSyntheticWav(s,
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id")).toDF()),
+          graft.io.Tables.read(s, s"$dir/documents.parquet"), "doc_id")).toDF()),
     // deterministic YUV420 encoded as a real YUV4MPEG2 stream, then
     // byte-level container parse + every-2nd-frame sampling + luma sums
     "mm_video" -> ((s, dir) =>
       Multimodal.decodeVideoFeatures(s,
         Multimodal.withSyntheticY4m(s,
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id"), step = 2).toDF())
+          graft.io.Tables.read(s, s"$dir/documents.parquet"), "doc_id"), step = 2).toDF())
   )
 
   // ---------- DuckDB oracle SQL ----------

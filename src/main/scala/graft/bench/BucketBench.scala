@@ -61,8 +61,8 @@ object BucketBench {
       df.filter(Constraints.validUrl)
 
     def plainJob(): Long = {
-      val pages = validOf(spark.read.parquet(plainPages))
-      val lineage = spark.read.parquet(plainLineage)
+      val pages = validOf(Tables.read(spark, plainPages))
+      val lineage = Tables.read(spark, plainLineage)
       DatasetChecks.uniquenessViolations(pages, ord)
         .unionByName(DatasetChecks.riViolations(
           pages.select("part", "doc_id", "url"), lineage, broadcastParent = false))

@@ -64,6 +64,7 @@ object ScalingBench {
     * collect is the timed work, so the pair set comes for free.
     */
   private def neardupRun(spark: SparkSession, path: String): (Double, Seq[String]) = {
+    // hive-partitioned (no top-level data file for Tables.schema): inferred read
     val pages = spark.read.parquet(path).select(col("doc_id"), col("text"))
     val (pairs, t) = timed(graft.sim.Sim.minhashLshPairs(pages, "doc_id", "text",
       n = 3, k = 8, rows = 2, threshold = 0.2)

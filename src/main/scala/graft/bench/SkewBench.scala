@@ -59,6 +59,7 @@ object SkewBench {
     if (!Files.exists(Paths.get(dataPath)))
       WebGen.pages(spark, n, parts = 64, skew = true)
         .write.partitionBy("part").mode("overwrite").parquet(dataPath)
+    // hive-partitioned (no top-level data file for Tables.schema): inferred read
     val pages = spark.read.parquet(dataPath)
       .filter(col("url").isNotNull)
       .select(col("url"), col("doc_id"),

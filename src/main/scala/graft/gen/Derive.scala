@@ -37,7 +37,7 @@ object Derive {
 
   /** Spark-side derivation. `html` is real `binary` per the input hint. */
   def webPages(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.io.Tables.read(spark, s"$sfDir/documents.parquet")
     val d = col("doc_id")
     val baseUrl = concat(
       lit("https://ex"), d % 7, lit(".org/doc/"),
@@ -71,7 +71,7 @@ object Derive {
     * `derived_from` dangling-edge analogue, neo4j_database.py:118-121).
     */
   def lineage(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.io.Tables.read(spark, s"$sfDir/documents.parquet")
     val d = col("doc_id")
     docs.filter(d % 6 =!= 5).select(
       concat(lit("https://ex"), d % 7, lit(".org/doc/"), d).as("url"),
@@ -106,7 +106,7 @@ object Derive {
     *   - d % 23 == 3    → mapping_date NULL; d % 4 == 1 → publication_date NULL
     */
   def mappings(spark: SparkSession, sfDir: String): DataFrame =
-    mappingsOf(spark.read.parquet(s"$sfDir/documents.parquet"))
+    mappingsOf(graft.io.Tables.read(spark, s"$sfDir/documents.parquet"))
 
   /** Same derivation from any `doc_id`-bearing input (every field is
     * pure arithmetic on the id) — lets benches derive arbitrarily large
@@ -177,7 +177,7 @@ object Derive {
     *   - d % 115 == 60 → conf_raw '0.<x>.<x>'      (double dot)
     */
   def webPagesRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.io.Tables.read(spark, s"$sfDir/documents.parquet")
     val d = col("doc_id")
     def p2(c: Column): Column = lpad(c.cast("string"), 2, "0")
     val validTs = concat(lit("2026-0"), d % 3 + 1, lit("-"), p2(d % 28 + 1),

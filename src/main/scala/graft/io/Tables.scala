@@ -24,7 +24,10 @@ object Tables {
     fs.exists(path)
   }
 
-  /** A parquet table read with its [[schema]]: no schema-inference job. */
+  /** A parquet table read with its [[schema]]: no schema-inference job.
+    * The engine's one read of a flat parquet table; a hive-partitioned
+    * directory has no top-level data file for [[schema]] to read.
+    */
   def read(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(schema(spark, root)).parquet(root)
 

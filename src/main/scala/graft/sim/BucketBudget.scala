@@ -79,13 +79,6 @@ object BucketBudget {
     * truncation decision on every engine and every run — a sampled gate
     * could flip between value-identical and truncated results.
     *
-    * Override knob: spark conf `graft.sim.capGate` = `always` skips the
-    * pre-pass and runs the unconditional window (the round-4 plan); any
-    * other value, unset included, is the exact pre-pass. `always` is for
-    * operators who KNOW the corpus is adversarial (boilerplate-dominated
-    * crawl) and would rather not pay the pre-pass before a cap that will
-    * certainly fire.
-    *
     * Eagerness: this runs one Spark job at PLAN CONSTRUCTION time. All
     * three call sites sit above a persisted upstream frame (the minhash
     * sig base, the simhash banded frame, the embedding bucketed index),
@@ -96,8 +89,6 @@ object BucketBudget {
     */
   def capIfNeeded(keys: DataFrame, groupCols: Seq[String], idCol: String, capN: Int): DataFrame =
     if (capN <= 0) keys
-    else if (keys.sparkSession.conf.get("graft.sim.capGate", "auto") == "always")
-      cap(keys, groupCols, idCol, capN)
     // persist the slim banded-key table on the INACTIVE path (round-5
     // verdict finding #2, adjusted by r06 measurement): uncached, the
     // pair self-join re-derived the banding on each side. The persist

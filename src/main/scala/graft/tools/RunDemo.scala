@@ -31,7 +31,7 @@ object RunDemo {
     println(s"[demo] verdict grid rows=${verdicts.count()} " +
       s"failed=${verdicts.filter(!col("passed")).count()}")
     Seq("violations", "metrics", "len_hist", "run_lineage", "digests").foreach { t =>
-      println(s"[demo] $t rows=" + spark.read.parquet(s"$root/$t").count())
+      println(s"[demo] $t rows=" + Tables.read(spark, s"$root/$t").count())
     }
 
     val tampered = pages.withColumn("text",

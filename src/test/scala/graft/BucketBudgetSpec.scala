@@ -120,21 +120,6 @@ class BucketBudgetSpec extends SparkSpecBase {
     assert(gated === direct)
   }
 
-  test("capGate=always skips the pre-pass and forces the unconditional window") {
-    val df = Seq(("g1", 5L), ("g1", 1L), ("g2", 7L)).toDF("k", "id")
-    spark.conf.set("graft.sim.capGate", "always")
-    try {
-      // healthy input (no group over cap=4) must STILL get the window plan
-      val forced = BucketBudget.capIfNeeded(df, Seq("k"), "id", 4)
-      assert(!(forced eq df), "always mode must not return the input plan")
-      assert(forced.queryExecution.optimizedPlan.toString.contains("row_number"),
-        "always mode must carry the cap window")
-      // and values are unchanged (cap inactive)
-      assert(forced.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
-        df.collect().map(r => (r.getString(0), r.getLong(1))).toSet)
-    } finally spark.conf.set("graft.sim.capGate", "auto")
-  }
-
   test("BucketBudget.cap keeps the cap smallest ids per group; truncationReport counts the rest") {
     val df = Seq(
       ("g1", 5L), ("g1", 1L), ("g1", 9L), ("g1", 3L),
@@ -146,5 +131,10 @@ class BucketBudgetSpec extends SparkSpecBase {
     val rep = BucketBudget.truncationReport(df, Seq("k"), 2)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(rep.toSeq == Seq(("g1", 4L, 2L)))
+    // no group over the cap: the unconditional window keeps every row
+    val healthy = Seq(("g1", 5L), ("g1", 1L), ("g2", 7L)).toDF("k", "id")
+    assert(BucketBudget.cap(healthy, Seq("k"), "id", 4)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
+      Set(("g1", 5L), ("g1", 1L), ("g2", 7L)))
   }
 }

@@ -1,15 +1,20 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.ConcurrentLinkedQueue
 
-/** Driver-contract invariants that don't need a SparkSession: the
-  * correctness gate compares every `queries` entry against its
-  * `oracleSql` twin, and the three query maps merge with `++`, which
-  * would SILENTLY shadow a duplicated name — both failure modes are
-  * zero-signal at verify time (a missing oracle degrades to rows-only;
-  * a shadowed query runs the wrong code under the right name).
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Driver-contract invariants: the correctness gate compares every
+  * `queries` entry against its `oracleSql` twin, and the three query
+  * maps merge with `++`, which would SILENTLY shadow a duplicated name —
+  * both failure modes are zero-signal at verify time (a missing oracle
+  * degrades to rows-only; a shadowed query runs the wrong code under the
+  * right name). Building a query's plan reads no parquet schema through
+  * a Spark job (`graft.Bench` times construction).
   */
-class ContractSpec extends AnyFunSuite {
+class ContractSpec extends SparkSpecBase {
 
   test("every driver query has a DuckDB oracle (no rows-only degradation)") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
@@ -31,7 +36,6 @@ class ContractSpec extends AnyFunSuite {
 
   test("every BucketBudget.cap call site has a truncation channel (no silent caps)") {
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala/graft")
     val sources = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
@@ -59,5 +63,25 @@ class ContractSpec extends AnyFunSuite {
     // truncation oracle pair, so the cap semantics stay engine-checked
     assert(SparkEntry.queries.contains("sim_lsh_budget"))
     assert(SparkEntry.queries.contains("sim_lsh_truncation"))
+  }
+
+  test("building every query starts no parquet schema-inference job") {
+    // a schema-less spark.read.parquet runs one job at plan construction,
+    // named for the reader's call site; Tables.read reads one footer instead
+    val inferred = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        j.stageInfos.map(_.name).filter(_.startsWith("parquet at ")).foreach(inferred.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries.values.foreach(build => build(spark, "perfbench/data/sf0.001"))
+      org.apache.spark.graft.Bus.drain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.catalog.clearCache()
+    }
+    assert(inferred.isEmpty, inferred.asScala.mkString(", "))
   }
 }

@@ -101,10 +101,14 @@ class PassAggregateSpec extends SparkSpecBase with BeforeAndAfterAll {
     }
     // plain: 6 tables + manifest; bucketed: url_violations on top
     assert(outputs.size == 15, outputs.mkString(", "))
-    // the sf0.001 test tables, in the copy the benchmark reads
-    val testTables = new File("perfbench/data/sf0.001").listFiles
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-    assert(testTables.size == 10, testTables.mkString(", "))
+    // the sf0.001 test tables in the copy the benchmark reads, and every
+    // scale of the driver's tables (the gate reads sf0.01, Bench sf0.1)
+    val testTables = ("perfbench/data/sf0.001" +:
+      Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"/root/testdata/$sf")).flatMap { dir =>
+      val ts = new File(dir).listFiles.filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+      assert(ts.size == 10, ts.mkString(", "))
+      ts
+    }
     (outputs ++ testTables).foreach { p =>
       assert(Tables.schema(spark, p) == spark.read.parquet(p).schema, p)
     }
