@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.agg.Confidence
-import graft.checks.Invariants
+import graft.checks.{DatasetChecks, Invariants}
 import graft.constraints.Constraints
 import graft.dedup.Dedup
 import graft.drift.Drift
@@ -39,13 +39,6 @@ object SparkEntry {
     "url IS NOT NULL AND length(url) > 0 AND " +
       s"regexp_matches(url, '${Constraints.UrlPattern}')" // ONE pattern definition
 
-  /** Deterministic dedup order: latest warc_ts wins, doc_id breaks ties
-    * (arg-max semantics of process.py:124-127).
-    */
-  private def dedupOrd: Column =
-    struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
-      (-col("doc_id")).as("negid"))
-
   /** Baseline snapshot with a known mutated-text subset (doc_id%113==44),
     * for the digest-invariant cross-run check.
     */
@@ -73,16 +66,16 @@ object SparkEntry {
 
     // ===== dataset-level checks folded into the same shapes =====
     "v_unique" -> ((s, dir) =>
-      graft.checks.DatasetChecks.uniquenessViolations(
-        validPages(Derive.webPages(s, dir)), dedupOrd)),
+      DatasetChecks.uniquenessViolations(
+        validPages(Derive.webPages(s, dir)), DatasetChecks.latestWins)),
     "verdicts_full" -> ((s, dir) => {
       val wp = Derive.webPages(s, dir)
       val valid = validPages(wp)
-      val dsViol = graft.checks.DatasetChecks.uniquenessViolations(valid, dedupOrd)
-        .unionByName(graft.checks.DatasetChecks.riViolations(valid, Derive.lineage(s, dir)))
+      val dsViol = DatasetChecks.uniquenessViolations(valid, DatasetChecks.latestWins)
+        .unionByName(DatasetChecks.riViolations(valid, Derive.lineage(s, dir)))
       val pc = valid.groupBy(col("part")).agg(count(lit(1)).as("row_count"))
       Runner.verdicts(wp, Constraints.webtextSuite)
-        .unionByName(graft.checks.DatasetChecks.verdictsFromViolations(
+        .unionByName(DatasetChecks.verdictsFromViolations(
           dsViol, pc, Seq("url_unique", "url_lineage")))
     }),
 
@@ -133,11 +126,11 @@ object SparkEntry {
     // ===== uniqueness / dedup (process.py:99-147 arg-max semantics) =====
     "dedup_url" -> ((s, dir) =>
       Dedup.uniqueByKey(validPages(Derive.webPages(s, dir)),
-        col("url"), dedupOrd, payload = Seq("doc_id"))
+        col("url"), DatasetChecks.latestWins, payload = Seq("doc_id"))
         .withColumnRenamed("key", "url")),
     "dedup_url_salted" -> ((s, dir) =>
       Dedup.uniqueByKeySalted(validPages(Derive.webPages(s, dir)),
-        col("url"), dedupOrd, payload = Seq("doc_id"), salts = 16)
+        col("url"), DatasetChecks.latestWins, payload = Seq("doc_id"), salts = 16)
         .withColumnRenamed("key", "url")),
     "dup_report" -> ((s, dir) =>
       Dedup.duplicateReport(validPages(Derive.webPages(s, dir)), col("url"))
@@ -258,7 +251,7 @@ object SparkEntry {
     "fmt_canonical" -> ((s, dir) => {
       val wp = validPages(Derive.webPages(s, dir))
       graft.io.Formatter.canonicalize(
-        wp, col("url"), dedupOrd, payload = Seq("doc_id"),
+        wp, col("url"), DatasetChecks.latestWins, payload = Seq("doc_id"),
         sortCols = Seq(col("key").asc),
         exclude = Some(Derive.webPages(s, dir).filter(col("lang") === "zz")),
         excludeKey = Some(col("url")))

@@ -55,22 +55,21 @@ object BucketBench {
         mode = "overwrite")
     }
 
-    val ord = struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
-      (-col("doc_id")).as("negid"))
     def validOf(df: org.apache.spark.sql.DataFrame) =
       df.filter(Constraints.validUrl)
 
     def plainJob(): Long = {
       val pages = validOf(Tables.read(spark, plainPages))
       val lineage = Tables.read(spark, plainLineage)
-      DatasetChecks.uniquenessViolations(pages, ord)
+      DatasetChecks.uniquenessViolations(pages, DatasetChecks.latestWins)
         .unionByName(DatasetChecks.riViolations(
           pages.select("part", "doc_id", "url"), lineage, broadcastParent = false))
         .count()
     }
     def bucketJob(): Long = {
       val pages = validOf(spark.table("bb_pages"))
-      DatasetChecks.urlChecksColocated(pages, spark.table("bb_lineage"), ord).count()
+      DatasetChecks.urlChecksColocated(pages, spark.table("bb_lineage"),
+        DatasetChecks.latestWins).count()
     }
 
     val rPlain = plainJob(); val rBucket = bucketJob() // warm-up + parity

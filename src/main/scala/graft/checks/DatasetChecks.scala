@@ -12,6 +12,17 @@ import graft.dedup.Dedup
   */
 object DatasetChecks {
 
+  /** The dedup order of the url checks: latest `warc_ts` wins (a null
+    * timestamp loses to any real one), `doc_id` breaks ties toward the
+    * smaller id — arg-max semantics of process.py:124-127. `v_unique`,
+    * `verdicts_full` and the bucketed [[graft.runner.ValidationRun]]
+    * pass all order by this one column, so their url checks cannot
+    * disagree on which row wins.
+    */
+  def latestWins: Column =
+    struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
+      (-col("doc_id")).as("negid"))
+
   /** Rows that lose the arg-max dedup (every duplicate beyond the kept
     * row) as violation rows: (part, doc_id, url, check_name, detail,
     * stage). Implemented as groupBy-count join rather than a window —

@@ -111,9 +111,6 @@ object QueryDsl {
       (subjLabel.isNull || objLabel.isNull ||
         normText(subjLabel) =!= normText(objLabel))
 
-  def sortPages(df: DataFrame, sorts: PageSort*): DataFrame =
-    df.orderBy(sorts.map(_.column): _*)
-
   /** paginate_mappings (query.py:295-337): negative values rejected. */
   def paginate(df: DataFrame, offset: Int, limit: Int): DataFrame = {
     require(offset >= 0, s"offset must be >= 0, got $offset")

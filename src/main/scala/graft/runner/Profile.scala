@@ -55,7 +55,7 @@ object Profile {
     val compiled = Constraints.compile(suite)
     val extra: String => Seq[Column] =
       if (checked) Stats.checkedAgg(rsd) else Stats.distinctAgg(exact = false)
-    perPart(pages, Runner.verdictAggs(compiled) ++ Stats.statAggs(columns, extra))
+    Stats.perPart(pages, Runner.verdictAggs(compiled) ++ Stats.statAggs(columns, extra))
   }
 
   /** The per-part aggregate of one [[ValidationRun]] batch: the
@@ -69,7 +69,7 @@ object Profile {
   def batchAggregate(pages: DataFrame, suite: Seq[Constraint], columns: Seq[String],
                      lengthOf: String): DataFrame = {
     val bucket = "__len_bucket"
-    perPart(pages.withColumn(bucket, Stats.log2Bucket(length(col(lengthOf)))),
+    Stats.perPart(pages.withColumn(bucket, Stats.log2Bucket(length(col(lengthOf)))),
       Runner.verdictAggs(Constraints.compile(suite)) ++
         Stats.statAggs(columns, Stats.distinctAgg(exact = false)) ++
         Stats.lengthBinAggs(col(bucket)) :+
@@ -78,11 +78,6 @@ object Profile {
 
   /** Column of [[batchAggregate]] counting the rows whose url is valid. */
   val ValidUrls = "valid_urls"
-
-  private def perPart(pages: DataFrame, aggs: Seq[Column]): DataFrame = {
-    val all = aggs :+ count(lit(1)).as("row_count")
-    pages.groupBy(col("part")).agg(all.head, all.tail: _*)
-  }
 
   /** The verdict-grid half, row-identical to `Runner.verdicts(pages,
     * suite)` when `agg` came from [[fusedAggregate]] over the same input.

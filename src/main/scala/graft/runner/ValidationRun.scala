@@ -168,9 +168,8 @@ object ValidationRun {
                                parts: Seq[Int]): DataFrame = {
     import graft.checks.DatasetChecks
     import graft.constraints.Constraints.validUrl
-    val ord = struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
-      (-col("doc_id")).as("negid"))
-    Tables.append(spark, DatasetChecks.urlChecksColocated(batch.filter(validUrl), lineage, ord)
+    Tables.append(spark, DatasetChecks.urlChecksColocated(batch.filter(validUrl), lineage,
+        DatasetChecks.latestWins)
       .withColumn("run_id", lit(runId)), Tables.ParquetTable(urlViolationsPath(root)))
     val found = Tables.read(spark, urlViolationsPath(root))
       .filter(col("run_id") === runId && col("part").isin(parts: _*))

@@ -117,7 +117,7 @@ object Ann {
     // members per (probe, key) enter the self-join — the degenerate
     // corpus (millions of identical/near-zero vectors in one bucket)
     // cannot go quadratic inside a key
-    val keys = BucketBudget.capIfNeeded(
+    val keys = BucketBudget.cap(
       probeKeys(c, nPlanes, nTables), Seq("probe", "key"), "id", bucketCap)
     val candidates = keys.as("a").join(keys.as("b"),
         col("a.probe") === col("b.probe") && col("a.key") === col("b.key") &&

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,9 +37,10 @@ import org.apache.spark.sql.functions._
   * 1000), so every graft session builder raises that threshold to
   * [[DefaultCap]]; without it the filter still bounds the JOIN input
   * but the degenerate bucket's rows would all funnel into one window
-  * task first. The window's required hash(group) distribution is
-  * exactly the candidate join's key, so capping adds NO extra exchange
-  * to the pair pipeline.
+  * task first. When the candidate join is a sort-merge join (the
+  * at-scale shape), the window's required hash(group) distribution is
+  * exactly the join's key, so capping adds no exchange; when a join side
+  * is small enough to broadcast, the window adds one hash exchange.
   *
   * Default cap: 100k members ⇒ ≤ 5·10⁹ candidate rows per degenerate
   * bucket per band — bounded work for one join key spread across AQE
@@ -47,74 +48,30 @@ import org.apache.spark.sql.functions._
   * web scale stays far below it. At the gate/bench scales every bucket
   * is orders of magnitude under the cap, so default-cap results are
   * value-identical to the uncapped semantics.
+  *
+  * One path: the three pair pipelines call [[cap]] unconditionally, and
+  * when no group is oversized the window keeps every row. The
+  * alternative — an exact oversized-group count run first, so a healthy
+  * corpus skips the window — starts Spark jobs while the plan is built,
+  * and it measured differently on two hosts (sf0.1, the four default-cap
+  * pair entries, the cap never active):
+  *  - 32 cores (BENCH/BASELINE.md, "TimeCap attribution, run 2"): the
+  *    window cost +14–18 % over no cap, the gated form +4–15 %;
+  *  - 4 vCPUs: the window alone was no slower than the gated form —
+  *    summed medians 5.44 s gated, 5.19 s window over 12 interleaved
+  *    reps, the window ahead in 9 — because the pre-pass jobs' fixed
+  *    cost is about the window's sort at this size.
+  * The sort grows with the data and the pre-pass is one slim aggregate,
+  * so measure again before reintroducing a pre-pass for larger corpora.
   */
 object BucketBudget {
 
   /** Inactive-by-accident guard: callers pass cap <= 0 to disable. */
   val DefaultCap: Int = 100000
 
-  /** The production form: gate the membership truncation behind an EXACT
-    * oversized-bucket count pre-pass, so a healthy corpus (no bucket over
-    * `capN` — every gate/bench scale, and every non-adversarial crawl)
-    * pays a slim hash aggregate instead of the window's two full sorts of
-    * the banded table.
-    *
-    * Why gate at all: round-5 TimeCap attribution (BENCH/BASELINE.md,
-    * "TimeCap attribution" sections) measured the always-on
-    * `row_number <= cap` window costing +7% to +44% (min-of-reps) across
-    * the four pair pipelines at sf0.1 even though no bucket was ever
-    * oversized — the WindowGroupLimit itself collapses
-    * degenerate buckets map-side, but its sort by (group, id) runs on
-    * BOTH sides of the band self-join regardless. The pre-pass is
-    * [[truncationReport]].isEmpty — a count aggregate with map-side
-    * partial combine whose shuffle carries one row per distinct bucket
-    * key, strictly cheaper than one sort of the same input. When it finds
-    * nothing, the caller gets its input back UNCHANGED and the pair plan
-    * is byte-identical to the ungated design; when it finds a hot bucket,
-    * the capped plan runs and the pre-pass cost is noise against an
-    * actually-truncating job.
-    *
-    * The decision is EXACT, not sampled (contrast Dedup.hotKeys): the
-    * active-cap oracle twins (`sim_lsh_budget`) require the same
-    * truncation decision on every engine and every run — a sampled gate
-    * could flip between value-identical and truncated results.
-    *
-    * Eagerness: this runs one Spark job at PLAN CONSTRUCTION time. All
-    * three call sites sit above a persisted upstream frame (the minhash
-    * sig base, the simhash banded frame, the embedding bucketed index),
-    * so the pre-pass also materializes the cache the main job's join
-    * sides reuse — the extra pass costs one cache write the pipeline
-    * needed anyway. Not usable on streaming frames (none of the LSH pair
-    * pipelines are streaming surfaces).
-    */
-  def capIfNeeded(keys: DataFrame, groupCols: Seq[String], idCol: String, capN: Int): DataFrame =
-    if (capN <= 0) keys
-    // persist the slim banded-key table on the INACTIVE path (round-5
-    // verdict finding #2, adjusted by r06 measurement): uncached, the
-    // pair self-join re-derived the banding on each side. The persist
-    // comes AFTER the pre-pass count, so the pre-pass does not fill the
-    // cache: the first join side fills it and the second reads it
-    // (measured −0.15–0.3 s on each of sim_minhash_lsh / emb_neardup /
-    // emb_neardup_multi at sf0.1). The ACTIVE path deliberately stays
-    // unpersisted: the capped window feeds both join sides through ONE
-    // ReusedExchange already (a single window evaluation), so caching
-    // the pre-window keys only adds the cache build — measured +0.2 s
-    // on sim_lsh_budget when persisted. Lifetime: this cache is created
-    // here, and callers that keep only their own frames have no handle
-    // to unpersist it — only `spark.catalog.clearCache()` releases it.
-    else if (truncationReport(keys, groupCols, capN).isEmpty) {
-      // no-op when the caller already persisted this exact frame
-      // (simhashPairs hands its persisted banded base straight in)
-      if (keys.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        keys.persist()
-      else keys
-    }
-    else cap(keys, groupCols, idCol, capN)
-
   /** Keep the `cap` smallest `idCol` members of every `groupCols` group
     * (ids must be unique for determinism — they are row keys here).
-    * Unconditional form — [[capIfNeeded]] is the production entry point;
-    * this stays public for tests that assert the window plan shape.
+    * `cap <= 0` disables the budget and returns `keys` unchanged.
     */
   def cap(keys: DataFrame, groupCols: Seq[String], idCol: String, cap: Int): DataFrame =
     if (cap <= 0) keys

@@ -219,7 +219,7 @@ object Sim {
         "trailing signature elements, and rows > k bands NOTHING (empty result)")
     val base = minhashSigBase(docs, idCol, textCol, n, k)
       .persist() // feeds banding + two shingle-set re-attach joins
-    val banded = BucketBudget.capIfNeeded(
+    val banded = BucketBudget.cap(
       minhashBanded(base, k, rows), Seq("band", "bkey"), "id", bucketCap)
     val candidates = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
@@ -306,19 +306,12 @@ object Sim {
     */
   def simhashPairs(sims: DataFrame, maxHamming: Int = SimhashBands - 1,
                    bucketCap: Int = BucketBudget.DefaultCap): DataFrame = {
-    // persist the slim (id, simhash, band, bkey) frame so the upstream
-    // SimHash60 pass runs ONCE: it feeds the gate's oversized-bucket
-    // pre-pass AND both self-join sides (which each recomputed it when
-    // this was unpersisted — the round-5 TimeCap gated run measured that
-    // recompute as +27% on this pipeline). Same lifetime contract as
-    // minhashLshPairs/lshNearDupPairsMulti: callers clearCache/unpersist
-    // after materializing the result. (A spread here would sit ABOVE
-    // the SimHash60 projection in `sims` and parallelize nothing —
-    // callers wanting the unsplittable-scan mitigation spread their
-    // docs BELOW Sim.simhash, as the sim_simhash_pairs entry does.)
-    val bandedBase = simhashBanded(sims).persist()
-    val banded = BucketBudget.capIfNeeded(
-      bandedBase, Seq("band", "bkey"), "id", bucketCap)
+    // (A spread here would sit ABOVE the SimHash60 projection in `sims`
+    // and parallelize nothing — callers wanting the unsplittable-scan
+    // mitigation spread their docs BELOW Sim.simhash, as the
+    // sim_simhash_pairs entry does.)
+    val banded = BucketBudget.cap(
+      simhashBanded(sims), Seq("band", "bkey"), "id", bucketCap)
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.id") < col("b.id"))

@@ -17,29 +17,21 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  /** Shared long-format scaffold for [[columnStats]] /
-    * [[columnStatsChecked]]: ONE aggregate over (null count, min, max +
-    * one per-column extra cell), exploded to a
-    * (part, column, null_rate, <cell>, min, max, row_count) row per
-    * column. The two public variants differ only in the extra cell
-    * (distinct count vs sketch-bound boolean) and the column-name field
-    * — a fix to the scaffold (null-or-empty definition, null_rate
-    * rounding) lands in both paths by construction.
+  /** The per-part aggregate every stats and verdict pass is built on:
+    * ONE `groupBy(part)` over `aggs` plus the shared `row_count`.
+    * [[columnStats]], [[columnStatsChecked]] and
+    * [[graft.runner.Profile]]'s fused aggregates all build it here, so a
+    * stand-alone pass and a fused one group and count rows the same way.
     */
-  private def longStats(df: DataFrame, columns: Seq[String],
-                        extraAgg: String => Seq[Column],
-                        cellOf: String => Column, cellName: String,
-                        colField: String): DataFrame = {
-    val aggs: Seq[Column] = statAggs(columns, extraAgg) :+
-      count(lit(1)).as("row_count")
-    val g = df.groupBy(col("part")).agg(aggs.head, aggs.tail: _*)
-    statRowsFromAgg(g, columns, cellOf, cellName, colField)
+  private[graft] def perPart(df: DataFrame, aggs: Seq[Column]): DataFrame = {
+    val all = aggs :+ count(lit(1)).as("row_count")
+    df.groupBy(col("part")).agg(all.head, all.tail: _*)
   }
 
-  /** The per-column aggregate half of [[longStats]] (null count, min,
-    * max + the variant's extra cells), WITHOUT the shared `row_count` —
-    * exposed so [[graft.runner.Profile]] can fuse these into the verdict
-    * aggregate's single pass without duplicating the expressions.
+  /** The per-column aggregate cells (null count, min, max + the
+    * variant's extra cells), WITHOUT the shared `row_count` — exposed so
+    * [[graft.runner.Profile]] can fuse these into the verdict aggregate's
+    * single pass without duplicating the expressions.
     */
   private[graft] def statAggs(columns: Seq[String],
                               extraAgg: String => Seq[Column]): Seq[Column] =
@@ -50,10 +42,12 @@ object Stats {
         max(col(c).cast("string")).as(s"max_$c")) ++ extraAgg(c)
     }
 
-  /** Explode a per-part aggregate frame carrying the [[statAggs]]
-    * columns plus `row_count` into the long (part, column, null_rate,
-    * <cell>, min, max, row_count) shape — the other half of
-    * [[longStats]], shared with the fused pass.
+  /** Explode a [[perPart]] aggregate frame carrying the [[statAggs]]
+    * columns into the long (part, column, null_rate, <cell>, min, max,
+    * row_count) shape — one row per column, shared with the fused pass.
+    * The two public variants differ only in the extra cell (distinct
+    * count vs sketch-bound boolean) and the column-name field, so a fix
+    * here (null-or-empty definition, null_rate rounding) lands in both.
     */
   private[graft] def statRowsFromAgg(g: DataFrame, columns: Seq[String],
                                      cellOf: String => Column, cellName: String,
@@ -96,10 +90,8 @@ object Stats {
     * distinct count, min/max (as strings).
     */
   def columnStats(df: DataFrame, columns: Seq[String], exact: Boolean = false): DataFrame =
-    longStats(df, columns,
-      extraAgg = distinctAgg(exact),
-      cellOf = distinctCell,
-      cellName = "distinct_count", colField = "column")
+    statRowsFromAgg(perPart(df, statAggs(columns, distinctAgg(exact))), columns,
+      distinctCell, cellName = "distinct_count", colField = "column")
 
   /** HLL++ accuracy verification: per (part, column), the exact stats
     * (null_rate, min, max, row_count) PLUS `distinct_ok` — whether the
@@ -117,10 +109,8 @@ object Stats {
     */
   def columnStatsChecked(df: DataFrame, columns: Seq[String],
                          rsd: Double = 0.05): DataFrame =
-    longStats(df, columns,
-      extraAgg = checkedAgg(rsd),
-      cellOf = checkedCell(rsd),
-      cellName = "distinct_ok", colField = "col_name")
+    statRowsFromAgg(perPart(df, statAggs(columns, checkedAgg(rsd))), columns,
+      checkedCell(rsd), cellName = "distinct_ok", colField = "col_name")
 
   /** Production quantile path: per-partition GK sketch
     * (`approx_percentile`, rank error <= 1/accuracy) over a numeric

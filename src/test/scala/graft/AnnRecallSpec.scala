@@ -174,6 +174,24 @@ class AnnRecallSpec extends SparkSpecBase {
     assert(lsh === Set((1L, 2L)))
   }
 
+  test("lshTruncationReport: planted identical vectors report every (probe, key) they share") {
+    // n identical vectors share all nTables × nPlanes (probe, key)
+    // buckets, so each of those buckets is over a cap of 2 by n - 2
+    val dim = 64
+    val v = Array.tabulate(dim)(i => math.sin(i * 1.7).toFloat)
+    val n = 7
+    val e = (0 until n).map(i => (i.toLong, v)).toDF("vec_id", "embedding")
+    val rep = Ann.lshTruncationReport(e, "vec_id", "embedding", dim, bucketCap = 2)
+      .select("probe", "n", "dropped").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    assert(rep.map(_._1).toSet === (0 until 3 * 8).toSet, rep.mkString(", "))
+    assert(rep.length == 3 * 8, rep.mkString(", "))
+    assert(rep.forall { case (_, m, dropped) => m == n && dropped == n - 2 },
+      rep.mkString(", "))
+    assert(Ann.lshTruncationReport(e, "vec_id", "embedding", dim).isEmpty,
+      "no bucket is over DefaultCap")
+  }
+
   test("simhash 15-bit bands: every pair within hamming 3 is a candidate (pigeonhole)") {
     // two docs whose simhashes differ in <= 3 bits must surface as a pair
     val docs = Seq(

@@ -104,22 +104,6 @@ class BucketBudgetSpec extends SparkSpecBase {
     assert(capped === uncapped, "default cap must be invisible on normal corpora")
   }
 
-  test("capIfNeeded gate: healthy input returns the input plan verbatim; hot input truncates") {
-    val df = Seq(
-      ("g1", 5L), ("g1", 1L), ("g1", 9L), ("g1", 3L),
-      ("g2", 7L), ("g2", 2L)).toDF("k", "id")
-    // cap=4: no group oversized -> the gate must hand back the SAME plan
-    // (eq reference), not merely equal values — this is what makes the
-    // healthy-corpus pair pipelines window-free (PlanSpec)
-    assert(BucketBudget.capIfNeeded(df, Seq("k"), "id", 4) eq df)
-    // cap=2: g1 oversized -> identical values to the unconditional cap
-    val gated = BucketBudget.capIfNeeded(df, Seq("k"), "id", 2)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val direct = BucketBudget.cap(df, Seq("k"), "id", 2)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(gated === direct)
-  }
-
   test("BucketBudget.cap keeps the cap smallest ids per group; truncationReport counts the rest") {
     val df = Seq(
       ("g1", 5L), ("g1", 1L), ("g1", 9L), ("g1", 3L),

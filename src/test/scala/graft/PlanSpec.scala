@@ -176,38 +176,25 @@ class PlanSpec extends SparkSpecBase {
       "all-pairs ngram baseline must stay demoted to a test oracle")
   }
 
-  test("LSH hot-bucket budget is GATED: healthy-corpus plans carry no window at all") {
-    // round-5 TimeCap attribution measured the always-on row_number<=cap
-    // window costing +41.5% on sim_minhash_lsh / +17% on emb_neardup at
-    // sf0.1 with the cap never active, so BucketBudget.capIfNeeded gates
-    // it behind an exact oversized-bucket count pre-pass. On a corpus
-    // with no oversized bucket the pair plan must be the ungated round-3
-    // plan: zero window nodes, zero window sorts.
-    for (name <- Seq("sim_minhash_lsh", "sim_simhash_pairs",
-        "emb_neardup", "emb_neardup_multi")) {
-      val p = planOf(name)
-      assert(!p.contains("WindowGroupLimit"),
-        s"$name pays the cap window on a healthy corpus (gate lost):\n$p")
-      assert(!p.contains("row_number"),
-        s"$name pays the cap row_number on a healthy corpus:\n$p")
-    }
-  }
-
-  test("when the pre-pass finds hot buckets the cap collapses map-side: partial WindowGroupLimit below the exchange") {
+  test("every LSH pair plan caps map-side: partial WindowGroupLimit below the exchange") {
     // BucketBudget.cap's row_number<=cap must rewrite to the two-phase
     // WindowGroupLimit (needs windowGroupLimitThreshold >= the cap, set
     // in every session builder): the PARTIAL node runs before the
     // window's exchange, so each map task forwards at most cap rows per
     // (band,bkey) — a degenerate bucket is truncated before it moves,
     // not after it funnels into one window task. sim_lsh_budget's planted
-    // boilerplate corpus fires the gate at cap=2.
-    val p = planOf("sim_lsh_budget")
-    assert(p.contains("WindowGroupLimit"), s"gate did not fire / rewrite lost:\n$p")
-    assert(p.contains(", Partial"), s"no MAP-SIDE partial group limit:\n$p")
-    // tree prints parent-first: Final above the Exchange above Partial
-    val exch = p.indexOf("Exchange")
-    assert(exch >= 0 && p.indexOf(", Partial", exch) > exch,
-      s"partial group limit must sit BELOW the exchange:\n$p")
+    // boilerplate corpus truncates at cap=2; the other four run at
+    // DefaultCap on a corpus with no oversized bucket.
+    for (name <- Seq("sim_lsh_budget", "sim_minhash_lsh", "sim_simhash_pairs",
+        "emb_neardup", "emb_neardup_multi")) {
+      val p = planOf(name)
+      assert(p.contains("WindowGroupLimit"), s"$name lost the cap rewrite:\n$p")
+      assert(p.contains(", Partial"), s"$name has no MAP-SIDE partial group limit:\n$p")
+      // tree prints parent-first: Final above the Exchange above Partial
+      val exch = p.indexOf("Exchange")
+      assert(exch >= 0 && p.indexOf(", Partial", exch) > exch,
+        s"$name: partial group limit must sit BELOW the exchange:\n$p")
+    }
     // and the rewrite still fires at DefaultCap (the production cap must
     // stay <= windowGroupLimitThreshold, which session builders raise).
     // Note: the input must have UNKNOWN maxRows (a parquet scan) — on a
