@@ -16,11 +16,13 @@ import graft.bench.BenchUtil
   *    doesn't need, so projection-only queries (digest, t_*, signatures)
   *    would skip the very compute being measured.
   *  - The cache is cleared after the warm-up pass and after each timed
-  *    query: operators that persist() intermediates (the sim_* shingle
-  *    tables) must rebuild them in the timed run instead of silently
-  *    reusing warm-up blocks, and cached blocks can't accumulate across
-  *    the suite and skew later queries (CacheManager matches by logical
-  *    plan, so re-invocations WOULD otherwise hit the warm-up's cache).
+  *    query: operators that persist() intermediates
+  *    (`Sim.minhashLshPairs`' signature base,
+  *    `Ann.lshNearDupPairsMulti`'s bucketed index) must rebuild them in
+  *    the timed run instead of silently reusing warm-up blocks, and
+  *    cached blocks can't accumulate across the suite and skew later
+  *    queries (CacheManager matches by logical plan, so re-invocations
+  *    WOULD otherwise hit the warm-up's cache).
   */
 object Bench {
 

@@ -66,17 +66,19 @@ object SparkEntry {
 
     // ===== dataset-level checks folded into the same shapes =====
     "v_unique" -> ((s, dir) =>
-      DatasetChecks.uniquenessViolations(
-        validPages(Derive.webPages(s, dir)), DatasetChecks.latestWins)),
+      DatasetChecks.uniquenessViolations(validPages(Derive.webPages(s, dir)), mergeJoins = false)),
     "verdicts_full" -> ((s, dir) => {
       val wp = Derive.webPages(s, dir)
       val valid = validPages(wp)
-      val dsViol = DatasetChecks.uniquenessViolations(valid, DatasetChecks.latestWins)
-        .unionByName(DatasetChecks.riViolations(valid, Derive.lineage(s, dir)))
+      val counts = DatasetChecks.urlCheckCounts(
+        DatasetChecks.urlViolations(valid, Derive.lineage(s, dir), mergeJoins = false))
+      // url rows only for parts with a valid url (the oracle's pcv)
       val pc = valid.groupBy(col("part")).agg(count(lit(1)).as("row_count"))
+      val agg = pc.join(counts, Seq("part"), "left")
+        .select(col("part") +: col("row_count") +: DatasetChecks.UrlChecks.map(c =>
+          coalesce(col(s"v_$c"), lit(0L)).as(s"v_$c")): _*)
       Runner.verdicts(wp, Constraints.webtextSuite)
-        .unionByName(DatasetChecks.verdictsFromViolations(
-          dsViol, pc, Seq("url_unique", "url_lineage")))
+        .unionByName(Runner.verdictRowsFromAgg(agg, DatasetChecks.UrlChecks))
     }),
 
     // ===== per-partition column statistics (condensation pass analogue) =====

@@ -14,8 +14,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators that persist() intermediates (sim_*) would otherwise
-      // accumulate cached blocks across the 60-query session
+      // operators that persist() intermediates (Sim.minhashLshPairs'
+      // signature base, Ann.lshNearDupPairsMulti's bucketed index) would
+      // otherwise accumulate cached blocks across the 89-query session
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -58,19 +58,12 @@ object BucketBench {
     def validOf(df: org.apache.spark.sql.DataFrame) =
       df.filter(Constraints.validUrl)
 
-    def plainJob(): Long = {
-      val pages = validOf(Tables.read(spark, plainPages))
-      val lineage = Tables.read(spark, plainLineage)
-      DatasetChecks.uniquenessViolations(pages, DatasetChecks.latestWins)
-        .unionByName(DatasetChecks.riViolations(
-          pages.select("part", "doc_id", "url"), lineage, broadcastParent = false))
-        .count()
-    }
-    def bucketJob(): Long = {
-      val pages = validOf(spark.table("bb_pages"))
-      DatasetChecks.urlChecksColocated(pages, spark.table("bb_lineage"),
-        DatasetChecks.latestWins).count()
-    }
+    // the same url-check operators and join strategy on both layouts:
+    // only the files differ
+    def plainJob(): Long = DatasetChecks.urlViolations(validOf(Tables.read(spark, plainPages)),
+      Tables.read(spark, plainLineage), mergeJoins = true).count()
+    def bucketJob(): Long = DatasetChecks.urlViolations(validOf(spark.table("bb_pages")),
+      spark.table("bb_lineage"), mergeJoins = true).count()
 
     val rPlain = plainJob(); val rBucket = bucketJob() // warm-up + parity
     require(rPlain == rBucket, s"results diverge: plain=$rPlain bucketed=$rBucket")

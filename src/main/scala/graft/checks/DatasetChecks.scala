@@ -9,96 +9,83 @@ import graft.dedup.Dedup
   * violation/verdict row shapes as the row-level suite so the outputs
   * union into one grid (north rule: uniqueness + referential checks are
   * part of the per-partition pass/fail).
+  *
+  * Both url checks have one implementation each, shared by the
+  * `v_unique`/`verdicts_full` entries and the bucketed
+  * [[graft.runner.ValidationRun]] pass; the callers differ only in join
+  * strategy (`mergeJoins`). Both fold [[urlCheckCounts]] into verdict
+  * rows with [[graft.runner.Runner.verdictRowsFromAgg]], each with its
+  * own per-part row counts, so each keeps its grid density:
+  *   - the pass gives every part of a batch both url checks, with 0
+  *     checked rows for a part whose urls are all malformed;
+  *   - `verdicts_full`'s url rows cover only parts with at least one
+  *     valid url, as its oracle's `pcv` CTE does.
   */
 object DatasetChecks {
 
+  /** The url-keyed dataset checks, in verdict-grid order. */
+  val UrlChecks: Seq[String] = Seq("url_unique", "url_lineage")
+
   /** The dedup order of the url checks: latest `warc_ts` wins (a null
     * timestamp loses to any real one), `doc_id` breaks ties toward the
-    * smaller id — arg-max semantics of process.py:124-127. `v_unique`,
-    * `verdicts_full` and the bucketed [[graft.runner.ValidationRun]]
-    * pass all order by this one column, so their url checks cannot
-    * disagree on which row wins.
+    * smaller id — arg-max semantics of process.py:124-127. The url
+    * checks and the `dedup_url*`/`fmt_canonical` entries all order by
+    * this one column, so they cannot disagree on which row wins.
     */
   def latestWins: Column =
     struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
       (-col("doc_id")).as("negid"))
+
+  private def violationRows(df: DataFrame, check: String, detail: Column): DataFrame =
+    df.select(col("part"), col("doc_id"), col("url"), lit(check).as("check_name"),
+      detail.as("detail"), lit("processing").as("stage"))
 
   /** Rows that lose the arg-max dedup (every duplicate beyond the kept
     * row) as violation rows: (part, doc_id, url, check_name, detail,
     * stage). Implemented as groupBy-count join rather than a window —
     * the duplicate SET per key is tiny (dup count), and the count
     * aggregate partial-combines map-side.
+    *
+    * `mergeJoins` merge-hints the keeper re-attach join. Over inputs
+    * bucketed by url ([[graft.io.Tables.writeBucketed]]) the keeper
+    * aggregate inherits the scan's hash distribution and the join plans
+    * with zero exchanges (PlanSpec asserts it); the hint keeps a
+    * size-misestimated broadcast from defeating that layout on the
+    * fact-fact shape. Without it the planner picks the join.
     */
-  def uniquenessViolations(pages: DataFrame, ord: Column): DataFrame = {
-    val keepers = Dedup.uniqueByKey(pages, col("url"), ord, Seq("doc_id"))
+  def uniquenessViolations(pages: DataFrame, mergeJoins: Boolean): DataFrame = {
+    val keepers = Dedup.uniqueByKey(pages, col("url"), latestWins, Seq("doc_id"))
       .select(col("key").as("url"), col("doc_id").as("__keep"))
-    pages.join(keepers, Seq("url"))
-      .filter(col("doc_id") =!= col("__keep"))
-      .select(col("part"), col("doc_id"), col("url"),
-        lit("url_unique").as("check_name"),
-        concat(lit("duplicate_of_"), col("__keep")).as("detail"),
-        lit("processing").as("stage"))
+    val joined = if (mergeJoins) pages.hint("merge").join(keepers.hint("merge"), Seq("url"))
+      else pages.join(keepers, Seq("url"))
+    violationRows(joined.filter(col("doc_id") =!= col("__keep")), "url_unique",
+      concat(lit("duplicate_of_"), col("__keep")))
   }
 
-  /** Dangling-lineage rows in violation shape. Broadcast the lineage
-    * keys only when they fit an executor (driver-data scale); at full
-    * scale pass false → shuffled sort-merge anti join.
+  /** Dangling-lineage rows in violation shape. Without `mergeJoins` the
+    * lineage keys are broadcast (driver-data scale); with it the anti
+    * join is a pinned sort-merge join, the full-scale and bucketed shape
+    * ([[Dedup.danglingRows]]).
     */
   def riViolations(pages: DataFrame, lineage: DataFrame,
-                   broadcastParent: Boolean = true): DataFrame =
-    Dedup.danglingRows(pages.select("part", "doc_id", "url"), lineage, "url",
-        broadcastParent = broadcastParent)
-      .select(col("part"), col("doc_id"), col("url"),
-        lit("url_lineage").as("check_name"),
-        lit("no_fetch_record").as("detail"),
-        lit("processing").as("stage"))
+                   mergeJoins: Boolean): DataFrame =
+    violationRows(Dedup.danglingRows(pages.select("part", "doc_id", "url"), lineage, "url",
+        broadcastParent = !mergeJoins), "url_lineage", lit("no_fetch_record"))
 
-  /** Both url-keyed dataset checks (uniqueness + lineage RI) as ONE plan
-    * over storage-co-located inputs: when `pages` and `lineage` are read
-    * from tables bucketed by url with the same bucket count
-    * ([[graft.io.Tables.writeBucketed]]), this entire union — groupBy,
-    * keeper re-attach join, distinct, anti join — plans with ZERO
-    * exchanges (PlanSpec asserts it): the url shuffle was paid once at
-    * write time. Joins are merge-hinted because the 100 TB shape is
-    * fact-fact — a size-misestimated broadcast would both re-materialize
-    * a huge side per executor and defeat the bucketed layout.
+  /** Both url checks' violation rows. Callers pass pages with
+    * well-formed urls only: the malformed ones are the row suite's
+    * finding, and they would all "dangle" as noise here.
     */
-  def urlChecksColocated(pages: DataFrame, lineage: DataFrame, ord: Column): DataFrame = {
-    // keepers groups by the bucket column ITSELF (no alias) so the
-    // aggregate inherits the scan's hash distribution verbatim
-    val keepers = pages.groupBy(col("url"))
-      .agg(max_by(col("doc_id"), ord).as("__keep"))
-      .hint("merge")
-    val uniq = pages.hint("merge").join(keepers, Seq("url"))
-      .filter(col("doc_id") =!= col("__keep"))
-      .select(col("part"), col("doc_id"), col("url"),
-        lit("url_unique").as("check_name"),
-        concat(lit("duplicate_of_"), col("__keep")).as("detail"),
-        lit("processing").as("stage"))
-    val parentKeys = lineage.select(col("url")).distinct().hint("merge")
-    val ri = pages.hint("merge").join(parentKeys, Seq("url"), "left_anti")
-      .select(col("part"), col("doc_id"), col("url"),
-        lit("url_lineage").as("check_name"),
-        lit("no_fetch_record").as("detail"),
-        lit("processing").as("stage"))
-    uniq.unionByName(ri)
-  }
+  def urlViolations(pages: DataFrame, lineage: DataFrame, mergeJoins: Boolean): DataFrame =
+    uniquenessViolations(pages, mergeJoins).unionByName(riViolations(pages, lineage, mergeJoins))
 
-  /** Fold violation rows into the dense per-(part, check) verdict grid
-    * shape, given the per-part row counts of the checked subset.
+  /** Per-part violation counts of url-check rows: (part, v_url_unique,
+    * v_url_lineage), the `v_<check>` columns
+    * [[graft.runner.Runner.verdictRowsFromAgg]] reads. A part appears
+    * only when it has a violation; callers default the rest to 0.
     */
-  def verdictsFromViolations(violations: DataFrame, partCounts: DataFrame,
-                             checkNames: Seq[String]): DataFrame = {
-    val checks = checkNames
-      .map(n => partCounts.sparkSession.range(1).select(lit(n).as("check_name")))
-      .reduce(_.union(_))
-    val vc = violations.groupBy(col("part"), col("check_name"))
-      .agg(count(lit(1)).as("violation_count"))
-    partCounts.crossJoin(checks)
-      .join(vc, Seq("part", "check_name"), "left")
-      .select(col("part"), col("check_name"),
-        (coalesce(col("violation_count"), lit(0L)) === 0L).as("passed"),
-        coalesce(col("violation_count"), lit(0L)).as("violation_count"),
-        col("row_count"))
+  def urlCheckCounts(violations: DataFrame): DataFrame = {
+    val counts = UrlChecks.map(c => count(when(col("check_name") === c, 1)).as(s"v_$c"))
+    violations.groupBy(col("part")).agg(counts.head, counts.tail: _*)
   }
 }

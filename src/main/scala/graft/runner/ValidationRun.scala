@@ -79,7 +79,6 @@ object ValidationRun {
     pass(spark, pages, suite, root, runId, Layout.Bucketed(lineage, buckets))
 
   private val StatsColumns = Seq("url", "lang")
-  private val UrlChecks = Seq("url_unique", "url_lineage")
 
   /** Most table partitions one batch may hold. The pass collects one
     * aggregate row per table partition to the Spark driver; a batch past this
@@ -160,29 +159,24 @@ object ValidationRun {
   /** The url-keyed dataset checks of a bucketed pass: appends their
     * violation rows to `url_violations` and returns their verdicts for
     * `parts`, whose [[Profile.batchAggregate]] rows are `agg`.
-    * Only well-formed urls participate — the malformed ones are the row
-    * suite's finding, and they'd all "dangle" as noise here.
+    * Only well-formed urls participate ([[graft.checks.DatasetChecks.urlViolations]]).
     */
   private def urlCheckVerdicts(spark: SparkSession, batch: DataFrame, lineage: DataFrame,
                                root: String, runId: String, agg: DataFrame,
                                parts: Seq[Int]): DataFrame = {
-    import graft.checks.DatasetChecks
+    import graft.checks.DatasetChecks.{UrlChecks, urlCheckCounts, urlViolations}
     import graft.constraints.Constraints.validUrl
-    Tables.append(spark, DatasetChecks.urlChecksColocated(batch.filter(validUrl), lineage,
-        DatasetChecks.latestWins)
+    Tables.append(spark, urlViolations(batch.filter(validUrl), lineage, mergeJoins = true)
       .withColumn("run_id", lit(runId)), Tables.ParquetTable(urlViolationsPath(root)))
-    val found = Tables.read(spark, urlViolationsPath(root))
-      .filter(col("run_id") === runId && col("part").isin(parts: _*))
-      .dropDuplicates("run_id", "part", "doc_id", "check_name")
-      .groupBy(col("check_name"), col("part")).count()
-      .collect().groupMap(_.getString(0))(r => r.getInt(1) -> r.getLong(2))
+    val found = urlCheckCounts(currentUrlViolations(spark, root)
+      .filter(col("run_id") === runId && col("part").isin(parts: _*))).collect()
     // every part of the batch gets both checks, with its valid-url count
     // as their row count: a partition whose urls are ALL malformed has no
     // violation rows and still gets its url checks, passed with 0
     // checked rows — the dense per-(part, check) grid is the contract
     // (DatasetChecks scaladoc)
     val counts = UrlChecks.map { c =>
-      val byPart = typedLit(found.getOrElse(c, Array.empty[(Int, Long)]).toMap)
+      val byPart = typedLit(found.map(r => r.getAs[Int]("part") -> r.getAs[Long](s"v_$c")).toMap)
       coalesce(byPart(col("part")), lit(0L)).as(s"v_$c")
     }
     Runner.verdictRowsFromAgg(

@@ -65,6 +65,14 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
   }
 
+  test("verdicts_full folds its url checks without a cross join; RI broadcasts") {
+    // the url-check grid is the per-part counts left-joined to the
+    // valid-row counts: no nested-loop or cartesian grid build
+    val p = planOf("verdicts_full")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    assert("""BroadcastHashJoin \[[^\]]*\], \[[^\]]*\], LeftAnti""".r.findFirstIn(p).nonEmpty, p)
+  }
+
   test("non-broadcast RI path pins a shuffled sort-merge anti join (the 100 TB shape)") {
     // broadcastParent=false is the fact-fact path: the plan must be a
     // SortMergeJoin LeftAnti with NO broadcast anywhere — a size
@@ -115,10 +123,8 @@ class PlanSpec extends SparkSpecBase {
 
     val valid = pages.filter(col("url").isNotNull && length(col("url")) > 0 &&
       col("url").rlike(graft.constraints.Constraints.UrlPattern))
-    val ord = struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
-      (-col("doc_id")).as("negid"))
-    val urlChecks = DatasetChecks.urlChecksColocated(
-      valid, spark.table("plan_lineage_b"), ord)
+    val urlChecks = DatasetChecks.urlViolations(
+      valid, spark.table("plan_lineage_b"), mergeJoins = true)
     val prev = spark.table("plan_digests_b")
       .select(col("url"), col("digest").as("digest_prev")).hint("merge")
     val dig = Invariants

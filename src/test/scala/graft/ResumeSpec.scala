@@ -106,12 +106,10 @@ class ResumeSpec extends SparkSpecBase {
         .select("part", "doc_id", "url", "check_name").collect().map(_.mkString("|")).toSet
     assert(urlViol(full) == urlViol(split))
 
-    // the co-located checks find exactly what the unbucketed operators find
-    val ord = struct(coalesce(unix_timestamp(col("warc_ts")), lit(-1L)).as("ts"),
-      (-col("doc_id")).as("negid"))
-    val ref = DatasetChecks.uniquenessViolations(genValid, ord)
-      .unionByName(DatasetChecks.riViolations(
-        genValid.select("part", "doc_id", "url"), lineageDf, broadcastParent = true))
+    // the pass's merge-joined checks over bucketed tables find exactly
+    // what the same operators find with the entries' join strategy over
+    // the unbucketed inputs
+    val ref = DatasetChecks.urlViolations(genValid, lineageDf, mergeJoins = false)
       .select("part", "doc_id", "url", "check_name")
       .collect().map(_.mkString("|")).toSet
     assert(urlViol(full) == ref)
