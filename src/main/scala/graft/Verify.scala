@@ -14,10 +14,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators that persist() intermediates (Sim.minhashLshPairs'
-      // signature base, Ann.lshNearDupPairsMulti's bucketed index) would
-      // otherwise accumulate cached blocks across the 89-query session
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

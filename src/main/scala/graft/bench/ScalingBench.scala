@@ -59,9 +59,10 @@ object ScalingBench {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
-  /** Shingle → one-pass signature → banding → hot-bucket budget gate →
-    * band self-join → exact-jaccard verify, over the planted corpus. The
-    * collect is the timed work, so the pair set comes for free.
+  /** Shingle → one-pass signature → banding → hot-bucket cap
+    * (`BucketBudget.cap`) → band self-join → exact-jaccard verify, over
+    * the planted corpus. The collect is the timed work, so the pair set
+    * comes for free.
     */
   private def neardupRun(spark: SparkSession, path: String): (Double, Seq[String]) = {
     // hive-partitioned (no top-level data file for Tables.schema): inferred read
@@ -95,10 +96,10 @@ object ScalingBench {
            |constraints, url uniqueness and lineage checks, stats, length
            |histogram, digests and lineage, over $cB url buckets""".stripMargin
       case "neardup" =>
-        """production (gated) MinHash LSH near-dup over the PLANTED
+        """production (capped) MinHash LSH near-dup over the PLANTED
           |near-dup corpus (WebGen.neardupDocs: 50k-pseudo-word vocab,
           |25-member cliques + adjacent pairs): shingle -> one-pass
-          |signature -> banding -> hot-bucket gate -> band self-join
+          |signature -> banding -> BucketBudget.cap -> band self-join
           |-> exact-jaccard verify; parity = the pair set itself""".stripMargin
       case other => sys.error(s"unknown job '$other' (suite | neardup)")
     }

@@ -46,11 +46,11 @@ object Scan {
   def spread(df: DataFrame): DataFrame =
     spread(df, df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Bounded-width variant for cached multi-consumer pipelines: a cache
-    * written at full parallelism fans every downstream stage that reads
-    * it into cores-many tasks, which for the LSH pair pipelines (many
-    * small stages over one small cache) costs more in task waves than
-    * the wider compute saves. `target` caps the spread width; the
+  /** Bounded-width variant for multi-consumer pipelines: a spread at
+    * full parallelism fans every downstream stage that reads it into
+    * cores-many tasks, which for the LSH pair pipelines (many small
+    * stages over one small input) costs more in task waves than the
+    * wider compute saves. `target` caps the spread width; the
     * under-parallelized-scan trigger condition is unchanged.
     */
   def spread(df: DataFrame, target: Int): DataFrame = {

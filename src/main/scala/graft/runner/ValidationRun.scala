@@ -87,73 +87,69 @@ object ValidationRun {
     */
   val MaxBatchParts = 4096
 
-  /** The one validation pass; `layout` decides whether the batch is
-    * cached, whether the url checks run and where the digest store lives.
+  /** The one validation pass; `layout` decides whether the url checks
+    * run and where the digest store lives. No layout caches the batch:
+    * the aggregate, violations and digests each re-scan it with pruned
+    * columns — cheaper than dragging text+html through a deserialized
+    * cache, which would also hide the storage distribution the bucketed
+    * layout exists to exploit.
     */
   private def pass(spark: SparkSession, pages: DataFrame, suite: Seq[Constraint],
                    root: String, runId: String, layout: Layout): Report = {
     val manifest = Checkpoint.state(spark, root)
-    val todo = if (manifest.done.isEmpty) pages
+    val batch = if (manifest.done.isEmpty) pages
       else pages.filter(!col("part").isin(manifest.done.toSeq.sorted: _*))
 
-    // Plain caches the batch: the aggregate, violations and digests share
-    // one scan. Bucketed does not: each of those re-scans the bucketed
-    // table with pruned columns — cheaper than dragging text+html through
-    // a deserialized cache, and a cache would hide the storage
-    // distribution the pass exists to exploit.
-    val (cache, urlLineage, digests) = layout match {
-      case Layout.Plain => (true, None, Tables.ParquetTable(digestsPath(root)))
-      case Layout.Bucketed(lineage, buckets) => (false, Some(lineage),
+    val (urlLineage, digests) = layout match {
+      case Layout.Plain => (None, Tables.ParquetTable(digestsPath(root)))
+      case Layout.Bucketed(lineage, buckets) => (Some(lineage),
         Tables.BucketedTable(digestTableName(root), s"$root/digests_bkt", "url", buckets))
     }
-    val batch = if (cache) todo.persist() else todo
     def stamp(df: DataFrame): DataFrame = df.withColumn("run_id", lit(runId))
     def append(df: DataFrame, path: String): Unit =
       Tables.append(spark, df, Tables.ParquetTable(path))
     // the derived tables: one file per table and batch
     def appendLocal(df: DataFrame, path: String): Unit = append(df.coalesce(1), path)
-    try {
-      // Every per-part fold of the pass — row verdicts, stats, length
-      // histogram, lineage counts, the url checks' row counts — comes
-      // from ONE aggregate over ONE scan, collected once (the reference
-      // validates and counts in the same read loop, io.py:894-907 feeding
-      // io.py:484-545). The tables below are derived from these rows.
-      val agg = Profile.batchAggregate(batch, suite, StatsColumns, "text")
-      val perPart = agg.limit(MaxBatchParts + 1).collect().toSeq.sortBy(_.getAs[Int]("part"))
-      require(perPart.length <= MaxBatchParts,
-        s"batch holds more than $MaxBatchParts table partitions; run it in smaller batches")
-      if (perPart.isEmpty) return Report(runId, manifest.latest, Nil, 0L)
-      val parts = perPart.map(_.getAs[Int]("part"))
-      val local = spark.createDataFrame(perPart.asJava, agg.schema)
+    // Every per-part fold of the pass — row verdicts, stats, length
+    // histogram, lineage counts, the url checks' row counts — comes
+    // from ONE aggregate over ONE scan, collected once (the reference
+    // validates and counts in the same read loop, io.py:894-907 feeding
+    // io.py:484-545). The tables below are derived from these rows.
+    val agg = Profile.batchAggregate(batch, suite, StatsColumns, "text")
+    val perPart = agg.limit(MaxBatchParts + 1).collect().toSeq.sortBy(_.getAs[Int]("part"))
+    require(perPart.length <= MaxBatchParts,
+      s"batch holds more than $MaxBatchParts table partitions; run it in smaller batches")
+    if (perPart.isEmpty) return Report(runId, manifest.latest, Nil, 0L)
+    val parts = perPart.map(_.getAs[Int]("part"))
+    val local = spark.createDataFrame(perPart.asJava, agg.schema)
 
-      append(stamp(Runner.violations(batch, suite, Seq("url"))), violationsPath(root))
-      val rowVerdicts = Profile.verdictRows(local, suite)
-      appendLocal(stamp(urlLineage.fold(rowVerdicts)(lineage =>
-        rowVerdicts.unionByName(urlCheckVerdicts(spark, batch, lineage, root, runId, local, parts)))),
-        verdictsPath(root))
-      appendLocal(stamp(Profile.statRows(local, StatsColumns)), metricsPath(root))
-      appendLocal(stamp(Stats.lengthHistRowsFromAgg(local)), s"$root/len_hist")
+    append(stamp(Runner.violations(batch, suite, Seq("url"))), violationsPath(root))
+    val rowVerdicts = Profile.verdictRows(local, suite)
+    appendLocal(stamp(urlLineage.fold(rowVerdicts)(lineage =>
+      rowVerdicts.unionByName(urlCheckVerdicts(spark, batch, lineage, root, runId, local, parts)))),
+      verdictsPath(root))
+    appendLocal(stamp(Profile.statRows(local, StatsColumns)), metricsPath(root))
+    appendLocal(stamp(Stats.lengthHistRowsFromAgg(local)), s"$root/len_hist")
 
-      // cross-run row invariant: byte-identical text per url
-      // (BASELINE.json::input_hint); changed digests append to the same
-      // violations table as the row constraints
-      Invariants.checkAndStoreDigests(spark, batch, digests,
-        Tables.ParquetTable(violationsPath(root)), runId)
+    // cross-run row invariant: byte-identical text per url
+    // (BASELINE.json::input_hint); changed digests append to the same
+    // violations table as the row constraints
+    Invariants.checkAndStoreDigests(spark, batch, digests,
+      Tables.ParquetTable(violationsPath(root)), runId)
 
-      // per-partition lineage rows (north rule): which run + snapshot
-      // processed which partition, with its row count — the audit trail a
-      // resumed run extends. Appended BEFORE the checkpoint commit: a
-      // crash between the two then loses a re-appendable audit row of a
-      // failed attempt, not (as commit-first would) the audit trail of a
-      // batch the manifest says is done.
-      val snap = manifest.next
-      appendLocal(stamp(local.select(col("part"), col("row_count")))
-        .withColumn("snapshot_id", lit(snap))
-        .withColumn("committed_at", current_timestamp()), lineagePath(root))
-      Checkpoint.commit(spark, root, runId, parts, snap)
+    // per-partition lineage rows (north rule): which run + snapshot
+    // processed which partition, with its row count — the audit trail a
+    // resumed run extends. Appended BEFORE the checkpoint commit: a
+    // crash between the two then loses a re-appendable audit row of a
+    // failed attempt, not (as commit-first would) the audit trail of a
+    // batch the manifest says is done.
+    val snap = manifest.next
+    appendLocal(stamp(local.select(col("part"), col("row_count")))
+      .withColumn("snapshot_id", lit(snap))
+      .withColumn("committed_at", current_timestamp()), lineagePath(root))
+    Checkpoint.commit(spark, root, runId, parts, snap)
 
-      Report(runId, snap, parts, perPart.map(_.getAs[Long]("row_count")).sum)
-    } finally if (cache) batch.unpersist()
+    Report(runId, snap, parts, perPart.map(_.getAs[Long]("row_count")).sum)
   }
 
   /** The url-keyed dataset checks of a bucketed pass: appends their

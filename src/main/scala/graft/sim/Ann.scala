@@ -106,13 +106,11 @@ object Ann {
                            dim: Int, threshold: Double, nPlanes: Int = 8,
                            nTables: Int = 3,
                            bucketCap: Int = BucketBudget.DefaultCap): DataFrame = {
-    // the bucketed index feeds key-gen + two vector re-attach joins —
-    // three scans of the corpus without this; at scale it is a
-    // materialized index table, persist is the in-session equivalent
-    // (same lifetime contract as Sim.minhashLshPairs: callers
-    // clearCache/unpersist after materializing the result)
+    // no cache: the two id-keyed vector re-attach joins below already
+    // share one exchange of the index (AQE plans the second as a
+    // ReusedExchange), and a persist inside a single query only adds its
+    // own materialization jobs on top of that
     val c = bucketedIndex(corpus, idCol, vecCol, dim, nPlanes, nTables)
-      .persist()
     // hot-bucket candidate budget (BucketBudget): at most bucketCap
     // members per (probe, key) enter the self-join — the degenerate
     // corpus (millions of identical/near-zero vectors in one bucket)

@@ -101,17 +101,11 @@ object Sim {
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.2): DataFrame = {
-    // persist: the shingle table feeds both self-join sides AND both
-    // size joins — uncached, Spark re-evaluates the tokenize+shingle+hash
-    // pipeline four times (at 100 TB this would be a materialized index
-    // table; here MEMORY_AND_DISK is the same idea in-session).
-    // LIFETIME: the blocks live until the caller drops them — a
-    // long-lived driver session invoking this repeatedly should
-    // `spark.catalog.clearCache()` (or unpersist) after materializing
-    // the result, as Bench/Verify do between queries.
+    // no cache: an operator owns no cache its caller cannot release, and
+    // at a test oracle's tiny scale re-evaluating the shingle pipeline
+    // for each join side is affordable
     val sh = shingled(docs, idCol, textCol, n)
       .select(col("id"), array_distinct(transform(col("shs"), shingleHash(_))).as("shs"))
-      .persist()
     val sizes = sh.select(col("id"), size(col("shs")).as("sz"))
     // explode_outer: plain explode triggers InferFiltersFromGenerate,
     // which duplicates the (expensive) shingle expression into a pushed
@@ -217,8 +211,11 @@ object Sim {
     require(rows >= 1 && k % rows == 0,
       s"rows ($rows) must divide k ($k): a remainder silently drops " +
         "trailing signature elements, and rows > k bands NOTHING (empty result)")
+    // no cache: the two id-keyed re-attach joins below already share one
+    // exchange of `base` (AQE plans the second as a ReusedExchange), and
+    // a persist inside a single query only adds its own materialization
+    // jobs on top of that
     val base = minhashSigBase(docs, idCol, textCol, n, k)
-      .persist() // feeds banding + two shingle-set re-attach joins
     val banded = BucketBudget.cap(
       minhashBanded(base, k, rows), Seq("band", "bkey"), "id", bucketCap)
     val candidates = banded.as("a").join(banded.as("b"),

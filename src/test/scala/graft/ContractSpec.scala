@@ -12,7 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * both failure modes are zero-signal at verify time (a missing oracle
   * degrades to rows-only; a shadowed query runs the wrong code under the
   * right name). Building a query's plan starts no Spark job but one
-  * bounded IVF centroid collect (`graft.Bench` times construction).
+  * bounded IVF centroid collect (`graft.Bench` times construction) and
+  * registers no cache.
   */
 class ContractSpec extends SparkSpecBase {
 
@@ -65,7 +66,7 @@ class ContractSpec extends SparkSpecBase {
     assert(SparkEntry.queries.contains("sim_lsh_truncation"))
   }
 
-  test("building every query starts no parquet schema-inference job") {
+  test("building every query starts no Spark job and caches nothing") {
     // building a plan starts no Spark job at all: no schema-less
     // spark.read.parquet (Tables.read reads one footer instead) and no
     // eager pre-pass. Every job counts, whatever its name: an AQE stage
@@ -73,7 +74,13 @@ class ContractSpec extends SparkSpecBase {
     // The one job allowed is emb_ivf_topk's IVF centroid collect: the
     // centroids are literals of the cell-assign expression, so they
     // must be on the driver before the plan exists, and the collect is
-    // count-limited (Ann.MaxCentroids)
+    // count-limited (Ann.MaxCentroids).
+    // Nor does it register a cache: persist() registers with the cache
+    // manager when it is called, before any job, and an operator's cache
+    // is one that a caller holding only the result cannot release
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cacheManager.isEmpty, "the session holds a cache before any plan is built")
     val jobs = new ConcurrentLinkedQueue[Seq[String]]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -81,13 +88,17 @@ class ContractSpec extends SparkSpecBase {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    try {
-      SparkEntry.queries.values.foreach(build => build(spark, "perfbench/data/sf0.001"))
+    val caching = try {
+      val names = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, build) =>
+        build(spark, "perfbench/data/sf0.001")
+        // cleared only on a failure, so that the next offender is named
+        // too and no later suite inherits the blocks
+        if (cacheManager.isEmpty) None else { cacheManager.clearCache(); Some(name) }
+      }
       org.apache.spark.graft.Bus.drain(sc)
-    } finally {
-      sc.removeSparkListener(listener)
-      spark.catalog.clearCache()
-    }
+      names
+    } finally sc.removeSparkListener(listener)
+    assert(caching.isEmpty, s"building these entries registered a cache: ${caching.mkString(", ")}")
     val (ivf, other) = jobs.asScala.toSeq
       .partition(_.exists(_.startsWith("collect at Ann.scala")))
     assert(other.isEmpty, s"${other.size} job(s) started while building plans: " +
