@@ -95,8 +95,8 @@ object TrainingQueries {
       Ann.bruteForceTopK(e, e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
     }),
     "emb_neardup" -> ((s, dir) =>
-      Ann.lshNearDupPairs(graft.io.Tables.read(s, s"$dir/embeddings.parquet"),
-        "vec_id", "embedding", dim = 64, threshold = 0.35)),
+      Ann.lshNearDupPairsMulti(graft.io.Tables.read(s, s"$dir/embeddings.parquet"),
+        "vec_id", "embedding", dim = 64, threshold = 0.35, nTables = 1)),
     "emb_neardup_multi" -> ((s, dir) =>
       Ann.lshNearDupPairsMulti(graft.io.Tables.read(s, s"$dir/embeddings.parquet"),
         "vec_id", "embedding", dim = 64, threshold = 0.35)),

@@ -59,8 +59,8 @@ object ScalingBench {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
-  /** Shingle → one-pass signature → banding → hot-bucket cap
-    * (`BucketBudget.cap`) → band self-join → exact-jaccard verify, over
+  /** Shingle → one-pass signature → banding → capped band self-join
+    * (`BucketBudget.candidatePairs`) → exact-jaccard verify, over
     * the planted corpus. The collect is the timed work, so the pair set
     * comes for free.
     */
@@ -99,8 +99,9 @@ object ScalingBench {
         """production (capped) MinHash LSH near-dup over the PLANTED
           |near-dup corpus (WebGen.neardupDocs: 50k-pseudo-word vocab,
           |25-member cliques + adjacent pairs): shingle -> one-pass
-          |signature -> banding -> BucketBudget.cap -> band self-join
-          |-> exact-jaccard verify; parity = the pair set itself""".stripMargin
+          |signature -> banding -> capped band self-join
+          |(BucketBudget.candidatePairs) -> exact-jaccard verify; parity =
+          |the pair set itself""".stripMargin
       case other => sys.error(s"unknown job '$other' (suite | neardup)")
     }
 

@@ -34,12 +34,9 @@ import org.apache.spark.sql.DataFrame
   * results across parallelism levels, which the driver's CPUS=8 Verify
   * vs CPUS=32 Bench has exercised since round 1).
   *
-  * Knob: spark conf `graft.scan.spread` = `auto` (default) | `off`.
-  * `off` exists for plan tests that assert the at-scale (no-exchange)
-  * shape, and for operators reading storage whose layout must be
-  * preserved (bucketed tables — which `spread` must never touch, since a
-  * round-robin would destroy the co-partitioning their zero-exchange
-  * plans rely on; no bucketed-path caller uses spread).
+  * Never for storage whose layout must be preserved: a round-robin would
+  * destroy the co-partitioning that the zero-exchange plans of bucketed
+  * tables rely on, and no bucketed-path caller uses spread.
   */
 object Scan {
 
@@ -53,10 +50,6 @@ object Scan {
     * wider compute saves. `target` caps the spread width; the
     * under-parallelized-scan trigger condition is unchanged.
     */
-  def spread(df: DataFrame, target: Int): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.get("graft.scan.spread", "auto") == "off") df
-    else if (df.rdd.getNumPartitions >= target) df
-    else df.repartition(target)
-  }
+  def spread(df: DataFrame, target: Int): DataFrame =
+    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
 }

@@ -65,19 +65,14 @@ object QueryDsl {
   }
 
   /** filter_mappings (query.py:89-101): predicate + optional whitelist
-    * semi-join (`keep_references_either`). `broadcastWhitelist = false`
-    * is the fact-sized-whitelist path (plans a shuffled semi join) —
-    * same flag discipline as `DatasetChecks.riViolations`: forcing a
-    * broadcast of a fact table is a driver OOM at the design scale.
+    * semi-join (`keep_references_either`) against the broadcast distinct
+    * whitelist urls.
     */
   def filterPages(df: DataFrame, q: PageQuery,
-                  urlWhitelist: Option[DataFrame] = None,
-                  broadcastWhitelist: Boolean = true): DataFrame = {
+                  urlWhitelist: Option[DataFrame] = None): DataFrame = {
     val filtered = df.filter(compile(q))
     urlWhitelist.fold(filtered) { w =>
-      val keys = w.select(col("url")).distinct()
-      filtered.join(if (broadcastWhitelist) broadcast(keys) else keys,
-        Seq("url"), "left_semi")
+      filtered.join(broadcast(w.select(col("url")).distinct()), Seq("url"), "left_semi")
     }
   }
 

@@ -42,12 +42,8 @@ object SetOps {
 
   /** remove_redundant_external (process.py:156-189): drop rows whose key
     * appears in any exclude set — bag semantics preserved (left_anti),
-    * broadcast when the exclude set is small.
+    * with the distinct exclude keys broadcast.
     */
-  def excludeByKey(df: DataFrame, exclude: DataFrame, key: Column,
-                   broadcastExclude: Boolean = true): DataFrame = {
-    val ex = exclude.select(key.as("__xk")).distinct()
-    val exB = if (broadcastExclude) broadcast(ex) else ex
-    df.join(exB, key === col("__xk"), "left_anti")
-  }
+  def excludeByKey(df: DataFrame, exclude: DataFrame, key: Column): DataFrame =
+    df.join(broadcast(exclude.select(key.as("__xk")).distinct()), key === col("__xk"), "left_anti")
 }

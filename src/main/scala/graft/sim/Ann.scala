@@ -1,6 +1,7 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`):
@@ -39,30 +40,35 @@ object Ann {
     when(!isnan(c), c)
   }
 
+  /** Top-k per query over (query_id, qv, id, cv) candidate rows: the
+    * query itself is skipped, every candidate is scored with
+    * [[cosScore]], and ranking uses the ROUNDED cosine + id tiebreak so
+    * results are stable across engines and runs. The one ranking of
+    * [[bruteForceTopK]], [[ivfTopK]] and [[lshTopK]].
+    */
+  private def topK(candidates: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("id").asc)
+    candidates.filter(col("id") =!= col("query_id"))
+      .select(col("query_id"), col("id"), cosScore(col("qv"), col("cv")).as("cos"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
   /** Brute-force cosine top-k: for each query vector, rank the whole
-    * corpus. Ordering uses the ROUNDED cosine + id tiebreak so results
-    * are stable across engines and runs.
+    * corpus.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"),
-        cosScore(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topK(c.crossJoin(broadcast(q)), k)
   }
 
   /** All near-duplicate pairs with cosine ≥ threshold (exact, all-pairs).
     *
     * TEST ORACLE ONLY: this is a genuine cartesian product — O(n²) rows
     * through the join, the canonical scale-killer. It exists to measure
-    * [[lshNearDupPairs]]' recall at tiny scale (AnnRecallSpec); the
+    * [[lshNearDupPairsMulti]]' recall at tiny scale (AnnRecallSpec); the
     * engine's near-dup entry point is the LSH multi-probe variant.
     */
   def cosineNearDupPairsExact(corpus: DataFrame, idCol: String, vecCol: String,
@@ -88,47 +94,26 @@ object Ann {
     * over single-bucket probing at nPlanes× slim-row cost — the standard
     * multi-probe trade. AnnRecallSpec measures recall against the exact
     * baseline.
-    */
-  def lshNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-                      dim: Int, threshold: Double, nPlanes: Int = 8): DataFrame =
-    lshNearDupPairsMulti(corpus, idCol, vecCol, dim, threshold, nPlanes, nTables = 1)
-
-  /** OR-composed multi-table variant: `nTables` INDEPENDENT plane sets
-    * (table t uses planes t·nPlanes … t·nPlanes+nPlanes−1 via the plane
-    * index in [[hyperplaneWeight]]), each probed with the 1-bit Hamming
-    * ring; a pair is a candidate if ANY table surfaces it. Misses
-    * multiply across tables (p_miss^nTables), which is what buys a
-    * recall FLOOR (AnnRecallSpec asserts it) at nTables× slim-row cost —
-    * the candidate join stays a (probe, key) equi join, no all-pairs
-    * shape anywhere (PlanSpec).
+    *
+    * `nTables` OR-composes INDEPENDENT plane sets (table t uses planes
+    * t·nPlanes … t·nPlanes+nPlanes−1 via the plane index in
+    * [[hyperplaneWeight]]), each probed with the 1-bit Hamming ring; a
+    * pair is a candidate if ANY table surfaces it. Misses multiply across
+    * tables (p_miss^nTables), which is what buys a recall FLOOR
+    * (AnnRecallSpec asserts it) at nTables× slim-row cost — the candidate
+    * join stays a (probe, key) equi join, no all-pairs shape anywhere
+    * (PlanSpec). `bucketCap` is the hot-bucket candidate budget
+    * ([[BucketBudget]]): a degenerate corpus (millions of identical or
+    * near-zero vectors in one bucket) cannot go quadratic inside a key.
     */
   def lshNearDupPairsMulti(corpus: DataFrame, idCol: String, vecCol: String,
                            dim: Int, threshold: Double, nPlanes: Int = 8,
                            nTables: Int = 3,
                            bucketCap: Int = BucketBudget.DefaultCap): DataFrame = {
-    // no cache: the two id-keyed vector re-attach joins below already
-    // share one exchange of the index (AQE plans the second as a
-    // ReusedExchange), and a persist inside a single query only adds its
-    // own materialization jobs on top of that
     val c = bucketedIndex(corpus, idCol, vecCol, dim, nPlanes, nTables)
-    // hot-bucket candidate budget (BucketBudget): at most bucketCap
-    // members per (probe, key) enter the self-join — the degenerate
-    // corpus (millions of identical/near-zero vectors in one bucket)
-    // cannot go quadratic inside a key
-    val keys = BucketBudget.cap(
-      probeKeys(c, nPlanes, nTables), Seq("probe", "key"), "id", bucketCap)
-    val candidates = keys.as("a").join(keys.as("b"),
-        col("a.probe") === col("b.probe") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .distinct()
-    val vecs = c.select(col("id"), col("v"))
-    candidates
-      .join(vecs.select(col("id").as("id_1"), col("v").as("v_1")), "id_1")
-      .join(vecs.select(col("id").as("id_2"), col("v").as("v_2")), "id_2")
-      .select(col("id_1"), col("id_2"),
-        cosScore(col("v_1"), col("v_2")).as("cos"))
-      .filter(col("cos") >= threshold)
+    Sim.verifyPairs(
+      BucketBudget.candidatePairs(probeKeys(c, nPlanes, nTables), Seq("probe", "key"), bucketCap),
+      c, "v", cosScore, "cos", threshold)
   }
 
   /** Bucketed index shared by the pair pipeline and its truncation twin:
@@ -293,20 +278,12 @@ object Ann {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               centroids: Seq[(Long, Array[Double])], k: Int, nprobe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(centroids.size >= 2, "IVF needs at least 2 centroids")
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("cv"))
       .withColumn("cell", ivfCell(col("cv"), centroids))
     val probes = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
       .withColumn("cell", explode(ivfProbeCells(col("qv"), centroids, nprobe)))
-    val scored = c.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"),
-        cosScore(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topK(c.join(broadcast(probes), Seq("cell")), k)
   }
 
   /** ANN via LSH buckets: score only candidates in the query's bucket.
@@ -314,18 +291,10 @@ object Ann {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, dim: Int, k: Int, nPlanes: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("cv"))
       .withColumn("bucket", lshBucket(col("cv"), dim, nPlanes))
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
       .withColumn("bucket", lshBucket(col("qv"), dim, nPlanes))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"),
-        cosScore(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topK(c.join(broadcast(q), Seq("bucket")), k)
   }
 }

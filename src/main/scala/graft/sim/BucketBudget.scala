@@ -49,7 +49,8 @@ import org.apache.spark.sql.functions._
   * is orders of magnitude under the cap, so default-cap results are
   * value-identical to the uncapped semantics.
   *
-  * One path: the three pair pipelines call [[cap]] unconditionally, and
+  * One path: the three pair pipelines take their candidates from
+  * [[candidatePairs]], which calls [[cap]] unconditionally, and
   * when no group is oversized the window keeps every row. The
   * alternative — an exact oversized-group count run first, so a healthy
   * corpus skips the window — starts Spark jobs while the plan is built,
@@ -81,6 +82,23 @@ object BucketBudget {
         .filter(col("__rn") <= cap)
         .drop("__rn")
     }
+
+  /** LSH candidate pairs: [[cap]] `keys` (an `id` column plus `groupCols`),
+    * self-join them on `groupCols` with `a.id < b.id`, and return each
+    * (id_1, id_2) pair once, however many groups it met in. Every other
+    * column of `keys` rides through the join as `<c>_1` and `<c>_2`,
+    * taken from one of the pair's groups, so it must be a function of
+    * the id (the SimHash pipeline carries its 60-bit hash this way).
+    */
+  def candidatePairs(keys: DataFrame, groupCols: Seq[String], capN: Int): DataFrame = {
+    val capped = cap(keys, groupCols, "id", capN)
+    val carried = "id" +: keys.columns.filterNot(c => c == "id" || groupCols.contains(c)).toSeq
+    capped.as("a").join(capped.as("b"),
+        groupCols.map(g => col(s"a.$g") === col(s"b.$g")).reduce(_ && _) &&
+          col("a.id") < col("b.id"))
+      .select(carried.flatMap(c => Seq(col(s"a.$c").as(s"${c}_1"), col(s"b.$c").as(s"${c}_2"))): _*)
+      .dropDuplicates("id_1", "id_2")
+  }
 
   /** The loud channel: one row per oversized group — (group, n, dropped).
     * A count aggregate (map-side partial combine, slim shuffle), same

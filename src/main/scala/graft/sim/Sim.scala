@@ -211,25 +211,29 @@ object Sim {
     require(rows >= 1 && k % rows == 0,
       s"rows ($rows) must divide k ($k): a remainder silently drops " +
         "trailing signature elements, and rows > k bands NOTHING (empty result)")
-    // no cache: the two id-keyed re-attach joins below already share one
-    // exchange of `base` (AQE plans the second as a ReusedExchange), and
-    // a persist inside a single query only adds its own materialization
-    // jobs on top of that
     val base = minhashSigBase(docs, idCol, textCol, n, k)
-    val banded = BucketBudget.cap(
-      minhashBanded(base, k, rows), Seq("band", "bkey"), "id", bucketCap)
-    val candidates = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .distinct()
-    val shSets = base.select(col("id"), col("shs"))
-    candidates
-      .join(shSets.select(col("id").as("id_1"), col("shs").as("shs_1")), "id_1")
-      .join(shSets.select(col("id").as("id_2"), col("shs").as("shs_2")), "id_2")
+    verifyPairs(
+      BucketBudget.candidatePairs(minhashBanded(base, k, rows), Seq("band", "bkey"), bucketCap),
+      base, "shs", (a, b) => round(jaccard(a, b), 6), "jac", threshold)
+  }
+
+  /** The verification step of the slim-key LSH pipelines
+    * ([[minhashLshPairs]], Ann.lshNearDupPairsMulti): re-attach
+    * `payloadCol` of `payload` to each side of the (id_1, id_2)
+    * candidates by two id-keyed joins, score the pair row-locally as
+    * `scoreCol` and keep scores >= `threshold`. Callers do not cache
+    * `payload`: the two joins already share one exchange of it (AQE
+    * plans the second as a ReusedExchange), and a persist inside a
+    * single query only adds its own materialization jobs on top.
+    */
+  private[sim] def verifyPairs(candidates: DataFrame, payload: DataFrame, payloadCol: String,
+                               score: (Column, Column) => Column, scoreCol: String,
+                               threshold: Double): DataFrame = {
+    def side(i: Int) = payload.select(col("id").as(s"id_$i"), col(payloadCol).as(s"${payloadCol}_$i"))
+    candidates.join(side(1), "id_1").join(side(2), "id_2")
       .select(col("id_1"), col("id_2"),
-        round(jaccard(col("shs_1"), col("shs_2")), 6).as("jac"))
-      .filter(col("jac") >= threshold)
+        score(col(s"${payloadCol}_1"), col(s"${payloadCol}_2")).as(scoreCol))
+      .filter(col(scoreCol) >= threshold)
   }
 
   /** The loud truncation channel for [[minhashLshPairs]]: one row per
@@ -307,14 +311,11 @@ object Sim {
     // and parallelize nothing — callers wanting the unsplittable-scan
     // mitigation spread their docs BELOW Sim.simhash, as the
     // sim_simhash_pairs entry does.)
-    val banded = BucketBudget.cap(
-      simhashBanded(sims), Seq("band", "bkey"), "id", bucketCap)
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
-      .dropDuplicates("id_1", "id_2")
+    // the 8-byte simhash rides through the candidate join: re-attaching
+    // it by id would re-run the SimHash pass
+    BucketBudget.candidatePairs(simhashBanded(sims), Seq("band", "bkey"), bucketCap)
+      .select(col("id_1"), col("id_2"),
+        bit_count(col("simhash_1").bitwiseXOR(col("simhash_2"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 

@@ -18,7 +18,7 @@ class AnnRecallSpec extends SparkSpecBase {
     def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("id_1", "id_2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairSet(Ann.cosineNearDupPairsExact(e, "vec_id", "embedding", 0.35))
-    val lsh = pairSet(Ann.lshNearDupPairs(e, "vec_id", "embedding", 64, 0.35))
+    val lsh = pairSet(Ann.lshNearDupPairsMulti(e, "vec_id", "embedding", 64, 0.35, nTables = 1))
     assert(lsh.subsetOf(exact), "LSH verifies true cosine — no false positives")
     if (exact.nonEmpty) {
       val recall = lsh.size.toDouble / exact.size
@@ -53,7 +53,7 @@ class AnnRecallSpec extends SparkSpecBase {
     def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("id_1", "id_2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairSet(Ann.cosineNearDupPairsExact(e, "vec_id", "embedding", 0.35))
-    val single = pairSet(Ann.lshNearDupPairs(e, "vec_id", "embedding", 64, 0.35))
+    val single = pairSet(Ann.lshNearDupPairsMulti(e, "vec_id", "embedding", 64, 0.35, nTables = 1))
     val multi = pairSet(Ann.lshNearDupPairsMulti(e, "vec_id", "embedding", 64, 0.35))
     info(f"thr=0.35: exact=${exact.size} single=${single.size} multi=${multi.size} " +
       f"recall_single=${single.size.toDouble / exact.size}%.3f " +
@@ -169,7 +169,7 @@ class AnnRecallSpec extends SparkSpecBase {
     val near = base.clone(); near(0) = near(0) + 1e-4f
     val far = Array.tabulate(dim)(i => math.cos(i * 2.3 + 1).toFloat)
     val e = Seq((1L, base), (2L, near), (3L, far)).toDF("vec_id", "embedding")
-    val lsh = Ann.lshNearDupPairs(e, "vec_id", "embedding", dim, 0.99)
+    val lsh = Ann.lshNearDupPairsMulti(e, "vec_id", "embedding", dim, 0.99, nTables = 1)
       .select("id_1", "id_2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh === Set((1L, 2L)))
   }

@@ -120,5 +120,14 @@ class BucketBudgetSpec extends SparkSpecBase {
     assert(BucketBudget.cap(healthy, Seq("k"), "id", 4)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
       Set(("g1", 5L), ("g1", 1L), ("g2", 7L)))
+    // candidatePairs self-joins the capped groups: ids 1 and 3 also share
+    // g4 (listed 3 first), and g2 lists 7 before 2 — each pair comes out
+    // once, always with id_1 < id_2, and the payload rides as p_1 / p_2
+    val keys = df.union(Seq(("g4", 3L), ("g4", 1L)).toDF("k", "id"))
+      .withColumn("p", col("id") * 10)
+    val pairs = BucketBudget.candidatePairs(keys, Seq("k"), 2)
+    assert(pairs.columns.toSeq == Seq("id_1", "id_2", "p_1", "p_2"))
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sorted.toSeq == Seq((1L, 3L, 10L, 30L), (2L, 7L, 20L, 70L)))
   }
 }

@@ -42,21 +42,23 @@ class ContractSpec extends SparkSpecBase {
       .filter(_.toString.endsWith(".scala"))
       .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
       .toSeq
-    val capRe = "BucketBudget\\.cap\\(".r
+    // a capped call is the cap itself or the LSH candidate function,
+    // which caps every pair pipeline's keys
+    val capRe = "BucketBudget\\.(cap|candidatePairs)\\(".r
     val capSites = sources.filter { case (p, s) =>
       capRe.findFirstIn(s).isDefined &&
         !p.toString.endsWith("BucketBudget.scala")
     }
-    assert(capSites.nonEmpty, "expected at least one BucketBudget.cap call site")
+    assert(capSites.nonEmpty, "expected at least one capped BucketBudget call site")
     // a future capped path must ship its own loud channel: every FILE
     // that caps must also expose a truncationReport-backed surface, and
-    // the number of cap calls in it must not exceed the number of
+    // the number of capped calls in it must not exceed the number of
     // truncation surfaces it defines (one twin per capped pipeline)
     capSites.foreach { case (p, s) =>
       val caps = capRe.findAllIn(s).size
       val reports = "BucketBudget\\.truncationReport\\(".r.findAllIn(s).size
       assert(reports >= caps,
-        s"$p has $caps BucketBudget.cap call(s) but only $reports " +
+        s"$p has $caps capped BucketBudget call(s) but only $reports " +
           "truncationReport surface(s) — a capped pipeline without its " +
           "loud twin truncates silently")
     }

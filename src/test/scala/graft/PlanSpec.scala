@@ -7,8 +7,10 @@ package graft
 class PlanSpec extends SparkSpecBase {
 
   val sfDir = "/root/testdata/sf0.001"
-  def planOf(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+  def planOf(name: String, dir: String = sfDir): String =
+    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+  /** The plan of `name` over the same tables split a file per core. */
+  def atScalePlanOf(name: String): String = planOf(name, SparkSpecBase.splitCopy(sfDir))
 
   test("violations channel is shuffle-free (pure projection + generate)") {
     val p = planOf("violations")
@@ -221,16 +223,15 @@ class PlanSpec extends SparkSpecBase {
     // r06: the banded input may carry the unsplittable-input spread (a
     // round-robin exchange below the signature pass); the COUNT
     // aggregate itself must still be one partial+final pair over one
-    // hash exchange — and with the spread disabled the whole plan is
-    // back to exactly one exchange (the at-scale shape)
+    // hash exchange — and over a scan with a split per core, where the
+    // spread is the identity, the whole plan is exactly one exchange
     val p = planOf("sim_lsh_truncation")
     assert(p.contains("partial_count"), s"truncation count must map-side combine:\n$p")
     assert("hashpartitioning".r.findAllIn(p).size == 1,
       s"truncation report is one count aggregate — one key shuffle:\n$p")
-    spark.conf.set("graft.scan.spread", "off")
-    try assert("Exchange".r.findAllIn(planOf("sim_lsh_truncation")).size == 1,
-      "at-scale truncation report must have exactly one exchange")
-    finally spark.conf.set("graft.scan.spread", "auto")
+    val p0 = atScalePlanOf("sim_lsh_truncation")
+    assert("Exchange".r.findAllIn(p0).size == 1,
+      s"at-scale truncation report must have exactly one exchange:\n$p0")
   }
 
   test("drift scans each input side ONCE (no duplicated totals subtree, no cross join)") {
@@ -268,12 +269,9 @@ class PlanSpec extends SparkSpecBase {
     assert(!p.toLowerCase.contains("batchevalpython") && !p.contains("ScalaUDF"), p)
     assert(!p.contains("hashpartitioning"), s"record hashing must not key-shuffle:\n$p")
     // at scale (scan splits >= parallelism) the spread is the identity and
-    // the plan is a pure scan-side projection — asserted via the off knob
-    spark.conf.set("graft.scan.spread", "off")
-    try {
-      val p0 = planOf("digest_record")
-      assert(!p0.contains("Exchange"), s"at-scale record hashing must not shuffle:\n$p0")
-    } finally spark.conf.set("graft.scan.spread", "auto")
+    // the plan is a pure scan-side projection
+    val p0 = atScalePlanOf("digest_record")
+    assert(!p0.contains("Exchange"), s"at-scale record hashing must not shuffle:\n$p0")
   }
 
   test("signature-only queries spread the unsplittable scan round-robin; at scale they are shuffle-free") {
@@ -283,10 +281,8 @@ class PlanSpec extends SparkSpecBase {
       val p = planOf(name)
       assert(p.contains("RoundRobinPartitioning"), s"$name must spread the one-split scan:\n$p")
       assert(!p.contains("hashpartitioning"), s"$name must not key-shuffle:\n$p")
-      spark.conf.set("graft.scan.spread", "off")
-      try assert(!planOf(name).contains("Exchange"),
-        s"at-scale $name must be a pure scan-side projection")
-      finally spark.conf.set("graft.scan.spread", "auto")
+      val p0 = atScalePlanOf(name)
+      assert(!p0.contains("Exchange"), s"at-scale $name must be a pure scan-side projection:\n$p0")
     }
   }
 

@@ -26,4 +26,22 @@ object SparkSpecBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private val splitCopies = scala.collection.concurrent.TrieMap.empty[String, String]
+
+  /** A temp copy of the tables in `dir` with each table written as
+    * `defaultParallelism` files: the at-scale regime, where every scan
+    * already yields a split per core and `Scan.spread` is the identity
+    * (the generated tables are one row group each, so over them the
+    * spread fires). Written once per JVM, deleted when it exits.
+    */
+  def splitCopy(dir: String): String = splitCopies.getOrElseUpdate(dir, {
+    val out = java.nio.file.Files.createTempDirectory("graft-split").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteDirectory(out))
+    val n = session.sparkContext.defaultParallelism
+    new java.io.File(dir).listFiles().map(_.getName).filter(_.endsWith(".parquet")).foreach { t =>
+      session.read.parquet(s"$dir/$t").repartition(n).write.parquet(s"$out/$t")
+    }
+    out.toString
+  })
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Guards for the unsplittable-input spread (graft.io.Scan.spread,
   * optimization guide §2.5): the mitigation must be value-invisible,
   * must fire only when the scan under-parallelizes, and must be a
-  * strict no-op both at scale (enough splits) and under the off knob.
+  * strict no-op at scale (enough splits).
   */
 class SpreadSpec extends SparkSpecBase {
 
@@ -18,13 +18,6 @@ class SpreadSpec extends SparkSpecBase {
       "spread must return the input object untouched when splits >= cores")
   }
 
-  test("spread is the identity under graft.scan.spread=off") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    spark.conf.set("graft.scan.spread", "off")
-    try assert(graft.io.Scan.spread(docs) eq docs)
-    finally spark.conf.set("graft.scan.spread", "auto")
-  }
-
   test("spread widens a one-split scan to the session parallelism") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     assume(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
@@ -34,14 +27,17 @@ class SpreadSpec extends SparkSpecBase {
 
   test("spread queries are value-identical to their unspread plans") {
     // the three spread families: codegen signature (minhash), token-HOF
-    // (langid), canonical record hash (digest_record)
+    // (langid), canonical record hash (digest_record), each over the
+    // one-file tables (the spread fires) and over the same rows split a
+    // file per core (the spread is the identity)
     for (name <- Seq("sim_minhash_sig", "t_langid", "digest_record")) {
-      def rows() = SparkEntry.queries(name)(spark, sfDir)
-        .collect().map(_.mkString("|")).sorted.toSeq
-      val spread = rows()
-      spark.conf.set("graft.scan.spread", "off")
-      val plain = try rows() finally spark.conf.set("graft.scan.spread", "auto")
-      assert(spread == plain, s"$name rows changed under spread")
+      val spreadDf = SparkEntry.queries(name)(spark, sfDir)
+      val plainDf = SparkEntry.queries(name)(spark, SparkSpecBase.splitCopy(sfDir))
+      def spreads(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+      assert(spreads(spreadDf) && !spreads(plainDf), s"$name: the spread must fire only over one file")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+      assert(rows(spreadDf) == rows(plainDf), s"$name rows changed under spread")
     }
   }
 
