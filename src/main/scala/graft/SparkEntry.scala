@@ -10,7 +10,7 @@ import graft.dedup.Dedup
 import graft.drift.Drift
 import graft.gen.Derive
 import graft.query.{PageQuery, QueryDsl, SetOps}
-import graft.runner.Runner
+import graft.runner.{Profile, Runner}
 import graft.stats.Stats
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -70,15 +70,10 @@ object SparkEntry {
     "verdicts_full" -> ((s, dir) => {
       val wp = Derive.webPages(s, dir)
       val valid = validPages(wp)
-      val counts = DatasetChecks.urlCheckCounts(
-        DatasetChecks.urlViolations(valid, Derive.lineage(s, dir), mergeJoins = false))
       // url rows only for parts with a valid url (the oracle's pcv)
-      val pc = valid.groupBy(col("part")).agg(count(lit(1)).as("row_count"))
-      val agg = pc.join(counts, Seq("part"), "left")
-        .select(col("part") +: col("row_count") +: DatasetChecks.UrlChecks.map(c =>
-          coalesce(col(s"v_$c"), lit(0L)).as(s"v_$c")): _*)
-      Runner.verdicts(wp, Constraints.webtextSuite)
-        .unionByName(Runner.verdictRowsFromAgg(agg, DatasetChecks.UrlChecks))
+      Runner.verdicts(wp, Constraints.webtextSuite).unionByName(DatasetChecks.urlCheckVerdicts(
+        Stats.perPart(valid, Nil),
+        DatasetChecks.urlViolations(valid, Derive.lineage(s, dir), mergeJoins = false)))
     }),
 
     // ===== per-partition column statistics (condensation pass analogue) =====
@@ -86,27 +81,19 @@ object SparkEntry {
     // the exact count and emitted as a boolean (scale path is the sketch;
     // the exact twin below is the oracle-only variant)
     "m_stats" -> ((s, dir) =>
-      Stats.columnStatsChecked(Derive.webPages(s, dir), Seq("url", "lang"))),
+      Stats.columnStats(Derive.webPages(s, dir), Seq("url", "lang"), Stats.Distinct.Checked)),
     "m_stats_exact" -> ((s, dir) =>
-      Stats.columnStats(Derive.webPages(s, dir), Seq("url", "lang"), exact = true)
+      Stats.columnStats(Derive.webPages(s, dir), Seq("url", "lang"), Stats.Distinct.Exact)
         .withColumnRenamed("column", "col_name")),
     // ===== fused validate+profile: verdicts AND stats from ONE scan =====
     // (reference computes both in one read pass; oracles are ALIASES of
     // the verdicts / m_stats oracles — fused must equal unfused exactly)
-    "fused_verdicts" -> ((s, dir) => {
-      val wp = Derive.webPages(s, dir)
-      graft.runner.Profile.verdictRows(
-        graft.runner.Profile.fusedAggregate(wp, Constraints.webtextSuite,
-          Seq("url", "lang")),
-        Constraints.webtextSuite)
-    }),
-    "fused_stats" -> ((s, dir) => {
-      val wp = Derive.webPages(s, dir)
-      graft.runner.Profile.statRowsChecked(
-        graft.runner.Profile.fusedAggregate(wp, Constraints.webtextSuite,
-          Seq("url", "lang"), checked = true),
-        Seq("url", "lang"))
-    }),
+    "fused_verdicts" -> ((s, dir) =>
+      Runner.verdictRowsFromAgg(Profile.fusedAggregate(Derive.webPages(s, dir),
+        Constraints.webtextSuite, Seq("url", "lang")), Constraints.webtextSuite.map(_.name))),
+    "fused_stats" -> ((s, dir) =>
+      Stats.statRows(Profile.fusedAggregate(Derive.webPages(s, dir), Constraints.webtextSuite,
+        Seq("url", "lang"), Stats.Distinct.Checked), Seq("url", "lang"), Stats.Distinct.Checked)),
     "m_len_hist" -> ((s, dir) =>
       Stats.lengthHistogram(Derive.webPages(s, dir), "text")),
     // GK quantile sketch with its rank-error bound verified against the
@@ -414,7 +401,7 @@ object SparkEntry {
        |  CAST(count(*) AS BIGINT) AS row_count
        |FROM web_pages GROUP BY part""".stripMargin
 
-  /** Oracle twin of Stats.columnStatsChecked: exact stats + a constant
+  /** Oracle twin of Stats.Distinct.Checked: exact stats + a constant
     * TRUE for the sketch bound — the Spark side emits false (→ red row)
     * if HLL++ drifts past 3·rsd of the exact count.
     */

@@ -3,6 +3,7 @@ package graft.checks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.runner.Runner.{verdictCell, verdictRowsFromAgg}
 
 /** Dataset-level checks that need a shuffle (unlike row constraints):
   * key uniqueness and referential integrity, emitted in the SAME
@@ -13,13 +14,15 @@ import graft.dedup.Dedup
   * Both url checks have one implementation each, shared by the
   * `v_unique`/`verdicts_full` entries and the bucketed
   * [[graft.runner.ValidationRun]] pass; the callers differ only in join
-  * strategy (`mergeJoins`). Both fold [[urlCheckCounts]] into verdict
-  * rows with [[graft.runner.Runner.verdictRowsFromAgg]], each with its
-  * own per-part row counts, so each keeps its grid density:
-  *   - the pass gives every part of a batch both url checks, with 0
-  *     checked rows for a part whose urls are all malformed;
-  *   - `verdicts_full`'s url rows cover only parts with at least one
-  *     valid url, as its oracle's `pcv` CTE does.
+  * strategy (`mergeJoins`). Both grids are [[urlCheckVerdicts]]; each
+  * caller keeps its grid density through the per-part row counts it
+  * passes:
+  *   - the pass passes every part of a batch with its valid-url count,
+  *     so a part whose urls are all malformed gets both url checks,
+  *     passed with 0 checked rows;
+  *   - `verdicts_full` passes the valid-url count of each part that has
+  *     one, so its url rows cover only those parts, as its oracle's
+  *     `pcv` CTE does.
   */
 object DatasetChecks {
 
@@ -79,13 +82,24 @@ object DatasetChecks {
   def urlViolations(pages: DataFrame, lineage: DataFrame, mergeJoins: Boolean): DataFrame =
     uniquenessViolations(pages, mergeJoins).unionByName(riViolations(pages, lineage, mergeJoins))
 
-  /** Per-part violation counts of url-check rows: (part, v_url_unique,
-    * v_url_lineage), the `v_<check>` columns
-    * [[graft.runner.Runner.verdictRowsFromAgg]] reads. A part appears
-    * only when it has a violation; callers default the rest to 0.
+  /** The url checks' verdict grid: one row per part of `rowCounts`
+    * (part, row_count) and url check, with the number of `violations`
+    * rows of that part and check (0 when it has none). The counts are
+    * the [[graft.runner.Runner.verdictCell]] columns
+    * [[graft.runner.Runner.verdictRowsFromAgg]] folds.
     */
-  def urlCheckCounts(violations: DataFrame): DataFrame = {
-    val counts = UrlChecks.map(c => count(when(col("check_name") === c, 1)).as(s"v_$c"))
+  def urlCheckVerdicts(rowCounts: DataFrame, violations: DataFrame): DataFrame = {
+    val agg = rowCounts.join(urlCheckCounts(violations), Seq("part"), "left")
+      .select(col("part") +: col("row_count") +: UrlChecks.map(verdictCell).map(v =>
+        coalesce(col(v), lit(0L)).as(v)): _*)
+    verdictRowsFromAgg(agg, UrlChecks)
+  }
+
+  /** Per-part violation counts of url-check rows; a part appears only
+    * when it has a violation.
+    */
+  private def urlCheckCounts(violations: DataFrame): DataFrame = {
+    val counts = UrlChecks.map(c => count(when(col("check_name") === c, 1)).as(verdictCell(c)))
     violations.groupBy(col("part")).agg(counts.head, counts.tail: _*)
   }
 }

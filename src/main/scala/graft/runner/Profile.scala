@@ -1,6 +1,6 @@
 package graft.runner
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.constraints.{Constraint, Constraints}
@@ -27,12 +27,13 @@ import graft.stats.Stats
   *
   * The aggregate and derivation expressions are THE SAME code the
   * stand-alone operators run ([[Runner.verdictAggs]] /
-  * [[Runner.verdictRowsFromAgg]], [[Stats.statAggs]] /
-  * [[Stats.statRowsFromAgg]] with [[Stats.distinctAgg]] or
-  * [[Stats.checkedAgg]] cells), so fused output is row-identical to the
-  * unfused operators by construction — ProfileSpec asserts it, and the
-  * driver gate checks `fused_verdicts` / `fused_stats` against the
-  * SAME DuckDB oracles as `verdicts` / `m_stats`.
+  * [[Runner.verdictRowsFromAgg]], [[Stats.statAggs]] / [[Stats.statRows]]
+  * with one [[Stats.Distinct]] flavour), so fused output is row-identical
+  * to the unfused operators by construction — ProfileSpec asserts it, and
+  * the driver gate checks `fused_verdicts` / `fused_stats` against the
+  * SAME DuckDB oracles as `verdicts` / `m_stats`. This object only
+  * composes aggregates; each cell family's owner folds its cells into
+  * rows.
   */
 object Profile {
 
@@ -40,23 +41,15 @@ object Profile {
     * + [[Stats.statAggs]] columns + the shared `row_count`, in one
     * partial+final pass.
     *
-    * `checked = false` (production): distinct counts are HLL++ only —
-    * no exact `countDistinct`, hence no Catalyst Expand; the whole
+    * With the production [[Stats.Distinct.Sketch]] flavour the whole
     * aggregate is one codegen'd pass (PlanSpec guards one scan, one
-    * exchange, no Expand). `checked = true` (verification): each column
-    * also carries the exact-distinct twin so the sketch bound can be
-    * emitted as an oracle-comparable boolean — this variant pays the
-    * multi-distinct Expand and exists for the gate, same as
-    * [[Stats.columnStatsChecked]].
+    * exchange, no Expand); [[Stats.Distinct.Checked]] pays the
+    * multi-distinct Expand of its exact twin and exists for the gate.
     */
-  def fusedAggregate(pages: DataFrame, suite: Seq[Constraint],
-                     columns: Seq[String], checked: Boolean = false,
-                     rsd: Double = 0.05): DataFrame = {
-    val compiled = Constraints.compile(suite)
-    val extra: String => Seq[Column] =
-      if (checked) Stats.checkedAgg(rsd) else Stats.distinctAgg(exact = false)
-    Stats.perPart(pages, Runner.verdictAggs(compiled) ++ Stats.statAggs(columns, extra))
-  }
+  def fusedAggregate(pages: DataFrame, suite: Seq[Constraint], columns: Seq[String],
+                     distinct: Stats.Distinct = Stats.Distinct.Sketch): DataFrame =
+    Stats.perPart(pages,
+      Runner.verdictAggs(Constraints.compile(suite)) ++ Stats.statAggs(columns, distinct))
 
   /** The per-part aggregate of one [[ValidationRun]] batch: the
     * production [[fusedAggregate]] columns, the batch's valid-url count
@@ -71,33 +64,10 @@ object Profile {
     val bucket = "__len_bucket"
     Stats.perPart(pages.withColumn(bucket, Stats.log2Bucket(length(col(lengthOf)))),
       Runner.verdictAggs(Constraints.compile(suite)) ++
-        Stats.statAggs(columns, Stats.distinctAgg(exact = false)) ++
-        Stats.lengthBinAggs(col(bucket)) :+
+        Stats.statAggs(columns, Stats.Distinct.Sketch) ++ Stats.lengthBinAggs(col(bucket)) :+
         sum(when(Constraints.validUrl, 1L).otherwise(0L)).as(ValidUrls))
   }
 
   /** Column of [[batchAggregate]] counting the rows whose url is valid. */
   val ValidUrls = "valid_urls"
-
-  /** The verdict-grid half, row-identical to `Runner.verdicts(pages,
-    * suite)` when `agg` came from [[fusedAggregate]] over the same input.
-    */
-  def verdictRows(agg: DataFrame, suite: Seq[Constraint]): DataFrame =
-    Runner.verdictRowsFromAgg(agg, suite.map(_.name))
-
-  /** The stats half, row-identical to `Stats.columnStats(pages,
-    * columns)`; requires `agg` built with `checked = false`.
-    */
-  def statRows(agg: DataFrame, columns: Seq[String]): DataFrame =
-    Stats.statRowsFromAgg(agg, columns, Stats.distinctCell,
-      cellName = "distinct_count", colField = "column")
-
-  /** The bound-checked stats half, row-identical to
-    * `Stats.columnStatsChecked(pages, columns, rsd)`; requires `agg`
-    * built with `checked = true` at the same rsd.
-    */
-  def statRowsChecked(agg: DataFrame, columns: Seq[String],
-                      rsd: Double = 0.05): DataFrame =
-    Stats.statRowsFromAgg(agg, columns, Stats.checkedCell(rsd),
-      cellName = "distinct_ok", colField = "col_name")
 }

@@ -62,22 +62,28 @@ object Runner {
           col("f.check_name"), col("f.detail"), col("f.stage")): _*)
   }
 
+  /** The per-part violation-count cell of a check, `v_<check>`: named
+    * here only, for [[verdictAggs]], [[verdictRowsFromAgg]] and the url
+    * checks' counts ([[graft.checks.DatasetChecks.urlCheckVerdicts]]).
+    */
+  private[graft] def verdictCell(check: String): String = s"v_$check"
+
   /** Per-constraint violation-count aggregate columns — the map-side
     * half of [[verdicts]]; [[Profile]] folds them into its per-part
     * aggregates, so every verdict grid runs the same expressions.
     */
   private[graft] def verdictAggs(compiled: Seq[RowConstraint]): Seq[Column] =
     compiled.map(c =>
-      sum(when(c.violated, 1L).otherwise(0L)).as(s"v_${c.name}"))
+      sum(when(c.violated, 1L).otherwise(0L)).as(verdictCell(c.name)))
 
-  /** Explode a per-part aggregate frame (carrying a `v_<check>`
-    * violation count per check name, as [[verdictAggs]] names them, plus
-    * `row_count`) into the dense verdict grid shape.
+  /** Explode a per-part aggregate frame (carrying a [[verdictCell]]
+    * violation count per check name plus `row_count`) into the dense
+    * verdict grid shape.
     */
   private[graft] def verdictRowsFromAgg(g: DataFrame, checks: Seq[String]): DataFrame = {
     val entries = array(checks.map(c => struct(
       lit(c).as("check_name"),
-      col(s"v_$c").as("violation_count"))): _*)
+      col(verdictCell(c)).as("violation_count"))): _*)
     g.select(col("part"), col("row_count"), explode(entries).as("e"))
       .select(
         col("part"),
@@ -93,5 +99,5 @@ object Runner {
     * partition, passing or not).
     */
   def verdicts(pages: DataFrame, suite: Seq[Constraint]): DataFrame =
-    Profile.verdictRows(Profile.fusedAggregate(pages, suite, Nil), suite)
+    verdictRowsFromAgg(Profile.fusedAggregate(pages, suite, Nil), suite.map(_.name))
 }

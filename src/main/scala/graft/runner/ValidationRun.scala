@@ -5,9 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.checks.Invariants
+import graft.checks.{DatasetChecks, Invariants}
 import graft.ckpt.Checkpoint
-import graft.constraints.Constraint
+import graft.constraints.{Constraint, Constraints}
 import graft.io.Tables
 import graft.stats.Stats
 
@@ -124,11 +124,11 @@ object ValidationRun {
     val local = spark.createDataFrame(perPart.asJava, agg.schema)
 
     append(stamp(Runner.violations(batch, suite, Seq("url"))), violationsPath(root))
-    val rowVerdicts = Profile.verdictRows(local, suite)
+    val rowVerdicts = Runner.verdictRowsFromAgg(local, suite.map(_.name))
     appendLocal(stamp(urlLineage.fold(rowVerdicts)(lineage =>
-      rowVerdicts.unionByName(urlCheckVerdicts(spark, batch, lineage, root, runId, local, parts)))),
+      rowVerdicts.unionByName(urlCheckVerdicts(spark, batch, lineage, root, runId, local)))),
       verdictsPath(root))
-    appendLocal(stamp(Profile.statRows(local, StatsColumns)), metricsPath(root))
+    appendLocal(stamp(Stats.statRows(local, StatsColumns, Stats.Distinct.Sketch)), metricsPath(root))
     appendLocal(stamp(Stats.lengthHistRowsFromAgg(local)), s"$root/len_hist")
 
     // cross-run row invariant: byte-identical text per url
@@ -154,29 +154,20 @@ object ValidationRun {
 
   /** The url-keyed dataset checks of a bucketed pass: appends their
     * violation rows to `url_violations` and returns their verdicts for
-    * `parts`, whose [[Profile.batchAggregate]] rows are `agg`.
-    * Only well-formed urls participate ([[graft.checks.DatasetChecks.urlViolations]]).
+    * the parts whose [[Profile.batchAggregate]] rows are `agg` — every
+    * part of the batch, with its valid-url count as the checks' row count
+    * (a part whose urls are ALL malformed gets both checks, passed with 0
+    * checked rows: the dense per-(part, check) grid is the contract).
+    * The read-back holds this run's earlier batches too; their parts are
+    * not in `agg`, so the grid's join drops them.
+    * Only well-formed urls participate ([[DatasetChecks.urlViolations]]).
     */
   private def urlCheckVerdicts(spark: SparkSession, batch: DataFrame, lineage: DataFrame,
-                               root: String, runId: String, agg: DataFrame,
-                               parts: Seq[Int]): DataFrame = {
-    import graft.checks.DatasetChecks.{UrlChecks, urlCheckCounts, urlViolations}
-    import graft.constraints.Constraints.validUrl
-    Tables.append(spark, urlViolations(batch.filter(validUrl), lineage, mergeJoins = true)
-      .withColumn("run_id", lit(runId)), Tables.ParquetTable(urlViolationsPath(root)))
-    val found = urlCheckCounts(currentUrlViolations(spark, root)
-      .filter(col("run_id") === runId && col("part").isin(parts: _*))).collect()
-    // every part of the batch gets both checks, with its valid-url count
-    // as their row count: a partition whose urls are ALL malformed has no
-    // violation rows and still gets its url checks, passed with 0
-    // checked rows — the dense per-(part, check) grid is the contract
-    // (DatasetChecks scaladoc)
-    val counts = UrlChecks.map { c =>
-      val byPart = typedLit(found.map(r => r.getAs[Int]("part") -> r.getAs[Long](s"v_$c")).toMap)
-      coalesce(byPart(col("part")), lit(0L)).as(s"v_$c")
-    }
-    Runner.verdictRowsFromAgg(
-      agg.select(col("part") +: col(Profile.ValidUrls).as("row_count") +: counts: _*), UrlChecks)
+                               root: String, runId: String, agg: DataFrame): DataFrame = {
+    Tables.append(spark, DatasetChecks.urlViolations(batch.filter(Constraints.validUrl), lineage,
+      mergeJoins = true).withColumn("run_id", lit(runId)), Tables.ParquetTable(urlViolationsPath(root)))
+    DatasetChecks.urlCheckVerdicts(agg.select(col("part"), col(Profile.ValidUrls).as("row_count")),
+      currentUrlViolations(spark, root).filter(col("run_id") === runId))
   }
 
   /** Catalog name for a root's bucketed digest store. MD5 of the root,

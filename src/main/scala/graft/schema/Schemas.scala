@@ -9,10 +9,6 @@ import java.sql.Timestamp
   * plus a table partition column `part` — the unit over which verdicts,
   * stats and lineage are computed (stable across Spark parallelism levels,
   * unlike task partitions).
-  *
-  * Output tables mirror the reference's error channel: failed rows become
-  * collected violation rows, not exceptions (reference:
-  * src/sssom_pydantic/io.py:86-102 `ParseError(line, exc, stage)`).
   */
 final case class WebPage(
     url: String,
@@ -22,41 +18,3 @@ final case class WebPage(
     lang: String,
     part: Int
 )
-
-/** Row-level violation — the `ParseError` analogue (io.py:86-102): one row
-  * per (input row, failed constraint), processing continues past failures.
-  */
-final case class Violation(
-    run_id: String,
-    part: Int,
-    url: String,
-    constraint: String,
-    detail: String,
-    stage: String // "raw" | "processing", mirroring io.py:83
-)
-
-/** Per-(partition, constraint) pass/fail verdict. */
-final case class Verdict(
-    run_id: String,
-    part: Int,
-    constraint: String,
-    passed: Boolean,
-    violation_count: Long,
-    row_count: Long
-)
-
-/** Per-(partition, column) statistics row (reference condensation pass,
-  * io.py:484-545, generalized).
-  */
-final case class ColumnStats(
-    run_id: String,
-    part: Int,
-    column: String,
-    null_rate: Double,
-    distinct_hll: Long,
-    min: String,
-    max: String
-)
-
-/** Lineage row: every valid page url must be traceable to a fetch record. */
-final case class LineageRow(url: String, warc_ts: Timestamp, fetch_id: String)

@@ -10,107 +10,116 @@ import org.apache.spark.sql.functions._
   * Scale design: ONE aggregate pass per call, keyed by the low-cardinality
   * table partition column, so partial aggregation collapses everything
   * map-side; the shuffle moves |parts| × (a few counters) rows. Distinct
-  * counts use HLL++ (`approx_count_distinct`) by default — exact
-  * `countDistinct` over many columns triggers Catalyst's Expand (row
-  * multiplication by #distinct-aggs), which is wrong at 100 TB. `exact =
-  * true` exists for small-scale oracle testing only.
+  * counts use HLL++ (`approx_count_distinct`, [[Distinct.Sketch]]) by
+  * default — exact `countDistinct` over many columns triggers Catalyst's
+  * Expand (row multiplication by #distinct-aggs), which is wrong at
+  * 100 TB. [[Distinct.Exact]] and [[Distinct.Checked]] exist for
+  * small-scale oracle testing only.
   */
 object Stats {
 
   /** The per-part aggregate every stats and verdict pass is built on:
     * ONE `groupBy(part)` over `aggs` plus the shared `row_count`.
-    * [[columnStats]], [[columnStatsChecked]] and
-    * [[graft.runner.Profile]]'s fused aggregates all build it here, so a
-    * stand-alone pass and a fused one group and count rows the same way.
+    * [[columnStats]] and [[graft.runner.Profile]]'s fused aggregates all
+    * build it here, so a stand-alone pass and a fused one group and count
+    * rows the same way.
     */
   private[graft] def perPart(df: DataFrame, aggs: Seq[Column]): DataFrame = {
     val all = aggs :+ count(lit(1)).as("row_count")
     df.groupBy(col("part")).agg(all.head, all.tail: _*)
   }
 
-  /** The per-column aggregate cells (null count, min, max + the
-    * variant's extra cells), WITHOUT the shared `row_count` — exposed so
-    * [[graft.runner.Profile]] can fuse these into the verdict aggregate's
-    * single pass without duplicating the expressions.
+  /** The distinct-count flavour of a stats pass: its per-column aggregate
+    * cells, the row cell folded from them and the names of that cell and
+    * of the column-name field. Named once, so the stand-alone stats pass
+    * and the fused validate+profile pass cannot drift.
     */
-  private[graft] def statAggs(columns: Seq[String],
-                              extraAgg: String => Seq[Column]): Seq[Column] =
+  sealed abstract class Distinct(val cellName: String, val colField: String) {
+    private[graft] def aggs(c: String): Seq[Column]
+    private[graft] def cell(c: String): Column
+  }
+  object Distinct {
+
+    /** A plain distinct count per column, `distinct_count`. */
+    sealed abstract class Count(f: Column => Column) extends Distinct("distinct_count", "column") {
+      private[graft] def aggs(c: String) = Seq(f(col(c)).as(s"distinct_$c"))
+      private[graft] def cell(c: String) = col(s"distinct_$c").cast("long")
+    }
+
+    /** HLL++ only, the production flavour: no exact `countDistinct`,
+      * hence no Catalyst Expand (PlanSpec guards the fused pass's shape).
+      */
+    case object Sketch extends Count(approx_count_distinct(_))
+
+    /** Exact `countDistinct`: the oracle-comparable count. */
+    case object Exact extends Count(countDistinct(_))
+
+    /** HLL++ accuracy verification: `distinct_ok` says whether the HLL++
+      * estimate (at rsd 0.05) is within 3·rsd of the exact distinct
+      * count. Emitting the bound check as a boolean makes the sketch
+      * oracle-checkable with exact comparisons: the DuckDB oracle computes
+      * the same exact stats and a constant TRUE, so a sketch drifting past
+      * its documented error bound turns the row red in the correctness
+      * gate. VERIFICATION-ONLY at scale: grading a sketch needs the truth,
+      * so this pays the multi-distinct Expand of the exact twin.
+      */
+    case object Checked extends Distinct("distinct_ok", "col_name") {
+      private val Rsd = 0.05
+      private[graft] def aggs(c: String) = Seq(
+        approx_count_distinct(col(c), Rsd).as(s"hll_$c"),
+        countDistinct(col(c)).as(s"exact_$c"))
+      private[graft] def cell(c: String) =
+        abs(col(s"hll_$c") - col(s"exact_$c")).cast("double") <=
+          lit(3 * Rsd) * greatest(col(s"exact_$c"), lit(1L)).cast("double")
+    }
+  }
+
+  /** The per-column aggregate cells (null count, min, max + the
+    * flavour's distinct cells), WITHOUT the shared `row_count` — exposed
+    * so [[graft.runner.Profile]] can fuse these into the verdict
+    * aggregate's single pass without duplicating the expressions.
+    */
+  private[graft] def statAggs(columns: Seq[String], distinct: Distinct): Seq[Column] =
     columns.flatMap { c =>
       Seq(
         sum(when(col(c).isNull || col(c).cast("string") === "", 1L).otherwise(0L)).as(s"nulls_$c"),
         min(col(c).cast("string")).as(s"min_$c"),
-        max(col(c).cast("string")).as(s"max_$c")) ++ extraAgg(c)
+        max(col(c).cast("string")).as(s"max_$c")) ++ distinct.aggs(c)
     }
 
   /** Explode a [[perPart]] aggregate frame carrying the [[statAggs]]
-    * columns into the long (part, column, null_rate, <cell>, min, max,
-    * row_count) shape — one row per column, shared with the fused pass.
-    * The two public variants differ only in the extra cell (distinct
-    * count vs sketch-bound boolean) and the column-name field, so a fix
-    * here (null-or-empty definition, null_rate rounding) lands in both.
+    * columns of `distinct` into the long (part, <colField>, null_rate,
+    * <cellName>, min, max, row_count) shape — one row per column, shared
+    * by the stand-alone and the fused pass, so a fix here (null-or-empty
+    * definition, null_rate rounding) lands in every flavour.
     */
-  private[graft] def statRowsFromAgg(g: DataFrame, columns: Seq[String],
-                                     cellOf: String => Column, cellName: String,
-                                     colField: String): DataFrame = {
+  def statRows(g: DataFrame, columns: Seq[String], distinct: Distinct): DataFrame = {
     val entries = array(columns.map(c => struct(
       lit(c).as("column"),
       col(s"nulls_$c").as("null_count"),
-      cellOf(c).as("cell"),
+      distinct.cell(c).as("cell"),
       coalesce(col(s"min_$c"), lit("NULL")).as("min"),
       coalesce(col(s"max_$c"), lit("NULL")).as("max"))): _*)
     g.select(col("part"), col("row_count"), explode(entries).as("e"))
       .select(
         col("part"),
-        col("e.column").as(colField),
+        col("e.column").as(distinct.colField),
         round(col("e.null_count").cast("double") / col("row_count"), 6).as("null_rate"),
-        col("e.cell").as(cellName),
+        col("e.cell").as(distinct.cellName),
         col("e.min").as("min"),
         col("e.max").as("max"),
         col("row_count"))
   }
 
-  /** The two distinct-count flavors and their cells, named once so the
-    * stand-alone stats pass and the fused validate+profile pass cannot
-    * drift: production = HLL++ only; checked = HLL++ + exact twin with
-    * the 3·rsd bound emitted as an oracle-comparable boolean.
+  /** Long-format stats: one row per (part, column) with null_rate, the
+    * `distinct` flavour's cell and min/max (as strings).
     */
-  private[graft] def distinctAgg(exact: Boolean)(c: String): Seq[Column] =
-    Seq((if (exact) countDistinct(col(c)) else approx_count_distinct(col(c)))
-      .as(s"distinct_$c"))
-  private[graft] def distinctCell(c: String): Column =
-    col(s"distinct_$c").cast("long")
-  private[graft] def checkedAgg(rsd: Double)(c: String): Seq[Column] = Seq(
-    approx_count_distinct(col(c), rsd).as(s"hll_$c"),
-    countDistinct(col(c)).as(s"exact_$c"))
-  private[graft] def checkedCell(rsd: Double)(c: String): Column =
-    abs(col(s"hll_$c") - col(s"exact_$c")).cast("double") <=
-      lit(3 * rsd) * greatest(col(s"exact_$c"), lit(1L)).cast("double")
+  def columnStats(df: DataFrame, columns: Seq[String],
+                  distinct: Distinct = Distinct.Sketch): DataFrame =
+    statRows(perPart(df, statAggs(columns, distinct)), columns, distinct)
 
-  /** Long-format stats: one row per (part, column) with null_rate,
-    * distinct count, min/max (as strings).
-    */
-  def columnStats(df: DataFrame, columns: Seq[String], exact: Boolean = false): DataFrame =
-    statRowsFromAgg(perPart(df, statAggs(columns, distinctAgg(exact))), columns,
-      distinctCell, cellName = "distinct_count", colField = "column")
-
-  /** HLL++ accuracy verification: per (part, column), the exact stats
-    * (null_rate, min, max, row_count) PLUS `distinct_ok` — whether the
-    * HLL++ estimate (`approx_count_distinct` at the given rsd) is within
-    * 3·rsd of the exact distinct count. Emitting the bound check as a
-    * boolean makes the sketch oracle-checkable with exact comparisons:
-    * the DuckDB oracle computes the same exact stats and a constant TRUE,
-    * so a sketch drifting past its documented error bound turns the row
-    * red in the correctness gate.
-    *
-    * VERIFICATION-ONLY at scale: this computes exact `countDistinct`
-    * alongside the sketch (the multi-distinct Expand), because grading a
-    * sketch needs the truth. The production entry point is
-    * [[columnStats]] with its `exact = false` default.
-    */
-  def columnStatsChecked(df: DataFrame, columns: Seq[String],
-                         rsd: Double = 0.05): DataFrame =
-    statRowsFromAgg(perPart(df, statAggs(columns, checkedAgg(rsd))), columns,
-      checkedCell(rsd), cellName = "distinct_ok", colField = "col_name")
+  /** The probe quantiles of [[approxQuantiles]] and [[quantilesChecked]]. */
+  private val Probes = Seq(0.5, 0.9, 0.99)
 
   /** Production quantile path: per-partition GK sketch
     * (`approx_percentile`, rank error <= 1/accuracy) over a numeric
@@ -118,17 +127,15 @@ object Stats {
     * partition regardless of row count. The quantile twin of
     * [[columnStats]]'s HLL++ default; verified by [[quantilesChecked]].
     */
-  def approxQuantiles(df: DataFrame, value: Column,
-                      qs: Seq[Double] = Seq(0.5, 0.9, 0.99),
-                      accuracy: Int = 10000): DataFrame =
+  def approxQuantiles(df: DataFrame, value: Column): DataFrame =
     df.select(col("part"), value.cast("long").as("v"))
       .filter(col("v").isNotNull)
       .groupBy(col("part"))
-      .agg(percentile_approx(col("v"), array(qs.map(lit): _*), lit(accuracy))
+      .agg(percentile_approx(col("v"), array(Probes.map(lit): _*), lit(10000))
         .as("quantiles"), count(lit(1)).as("n"))
 
   /** GK-sketch accuracy verification — the quantile twin of
-    * [[columnStatsChecked]]: per (part, probe quantile q), the sketch
+    * [[Distinct.Checked]]: per (part, probe quantile q), the sketch
     * value must lie between the EXACT order statistics at ranks
     * (q ∓ 3ε)·n, ε = 1/accuracy (3× the GK guarantee, mirroring the
     * HLL check's 3σ margin). The emitted columns are all
@@ -142,20 +149,19 @@ object Stats {
     * each group's values are materialized sorted (`collect_list`). The
     * production entry point is [[approxQuantiles]].
     */
-  def quantilesChecked(df: DataFrame, value: Column,
-                       qs: Seq[Double] = Seq(0.5, 0.9, 0.99),
-                       accuracy: Int = 100): DataFrame = {
+  def quantilesChecked(df: DataFrame, value: Column): DataFrame = {
+    val accuracy = 100
     val eps = 3.0 / accuracy
     val g = df.select(col("part"), value.cast("long").as("v"))
       .filter(col("v").isNotNull)
       .groupBy(col("part"))
       .agg(
         sort_array(collect_list(col("v"))).as("sorted"),
-        percentile_approx(col("v"), array(qs.map(lit): _*), lit(accuracy))
+        percentile_approx(col("v"), array(Probes.map(lit): _*), lit(accuracy))
           .as("approx"),
         count(lit(1)).as("n"))
     // probe quantiles with their 1-based index into the approx array
-    val probes = array(qs.zipWithIndex.map { case (q, i) =>
+    val probes = array(Probes.zipWithIndex.map { case (q, i) =>
       struct(lit(q).as("q"), lit(i + 1).as("i")) }: _*)
     g.select(col("part"), col("n"), col("sorted"), col("approx"),
         explode(probes).as("p"))

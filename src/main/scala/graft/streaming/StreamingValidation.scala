@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.constraints.Constraint
 import graft.runner.Runner
@@ -22,17 +21,6 @@ import graft.runner.Runner
   * state size is |parts| × windows-in-flight, independent of row volume.
   */
 object StreamingValidation {
-
-  /** File-stream source over a parquet directory of pages. */
-  def pagesStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
-
-  /** Violations as an append-mode stream (same semantics as the batch
-    * channel — one row per (input row, failed constraint)).
-    */
-  def violationStream(pages: DataFrame, suite: Seq[Constraint],
-                      keyCols: Seq[String]): DataFrame =
-    Runner.violations(pages, suite, keyCols)
 
   /** Per-(event-time window, part) violation counts with a watermark —
     * the streaming verdict feed. Late pages beyond the watermark are

@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
+import graft.checks.DatasetChecks
 import graft.ckpt.Checkpoint
 import graft.constraints.Constraints
 import graft.gen.WebGen
@@ -84,14 +85,25 @@ class PassAggregateSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(dump(got) == expected, s"$layout $table differs from its stand-alone operator")
     }
 
-    // the url checks' grid keeps the part without a valid url: passed,
-    // nothing checked
+    // the url checks' grid: both checks on every part, the part's
+    // valid-url count as row count (part 0 has none: passed, nothing
+    // checked), and the violation count of this run's url violations
     val bkt = roots.toMap.apply("bucketed")
-    val part0 = spark.read.parquet(ValidationRun.verdictsPath(bkt))
-      .filter(col("part") === 0 && col("check_name").isin("url_unique", "url_lineage"))
-      .select("check_name", "passed", "violation_count", "row_count")
-    assert(part0.collect().map(_.mkString("|")).sorted.toSeq ==
-      Seq("url_lineage|true|0|0", "url_unique|true|0|0"))
+    val validByPart = pages.groupBy(col("part"))
+      .agg(sum(when(Constraints.validUrl, 1L).otherwise(0L)))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val found = ValidationRun.currentUrlViolations(spark, bkt).groupBy("part", "check_name").count()
+      .collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(validByPart.keySet == Set(0, 1, 2, 3) && validByPart(0) == 0L)
+    assert(found.nonEmpty, "the fixture has url violations")
+    val urlWant = for (p <- validByPart.keys.toSeq; c <- DatasetChecks.UrlChecks) yield {
+      val v = found.getOrElse((p, c), 0L)
+      s"$p|$c|${v == 0L}|$v|${validByPart(p)}"
+    }
+    val urlGot = spark.read.parquet(ValidationRun.verdictsPath(bkt))
+      .filter(col("check_name").isin(DatasetChecks.UrlChecks: _*))
+      .select("part", "check_name", "passed", "violation_count", "row_count")
+    assert(urlGot.collect().map(_.mkString("|")).sorted.toSeq == urlWant.sorted)
   }
 
   test("footer schema equals the inferred schema: every pass output and every test table") {

@@ -26,7 +26,7 @@ class ProfileSpec extends SparkSpecBase {
   test("fused verdict half ≡ Runner.verdicts (schema + rows)") {
     val wp = Derive.webPages(spark, dir)
     val agg = Profile.fusedAggregate(wp, Constraints.webtextSuite, cols)
-    val fused = dump(Profile.verdictRows(agg, Constraints.webtextSuite))
+    val fused = dump(Runner.verdictRowsFromAgg(agg, Constraints.webtextSuite.map(_.name)))
     val solo = dump(Runner.verdicts(wp, Constraints.webtextSuite))
     assert(fused._1 == solo._1, "schema drift between fused and solo verdicts")
     assert(fused._2 == solo._2, "row drift between fused and solo verdicts")
@@ -36,19 +36,18 @@ class ProfileSpec extends SparkSpecBase {
   test("fused stats half ≡ Stats.columnStats (schema + rows, HLL++ included)") {
     val wp = Derive.webPages(spark, dir)
     val agg = Profile.fusedAggregate(wp, Constraints.webtextSuite, cols)
-    val fused = dump(Profile.statRows(agg, cols))
+    val fused = dump(Stats.statRows(agg, cols, Stats.Distinct.Sketch))
     val solo = dump(Stats.columnStats(wp, cols))
     assert(fused._1 == solo._1, "schema drift between fused and solo stats")
     assert(fused._2 == solo._2, "row drift between fused and solo stats")
     assert(fused._2.nonEmpty)
   }
 
-  test("fused checked stats half ≡ Stats.columnStatsChecked") {
+  test("fused checked stats half ≡ Stats.columnStats with Distinct.Checked") {
     val wp = Derive.webPages(spark, dir)
-    val agg = Profile.fusedAggregate(wp, Constraints.webtextSuite, cols,
-      checked = true)
-    val fused = dump(Profile.statRowsChecked(agg, cols))
-    val solo = dump(Stats.columnStatsChecked(wp, cols))
+    val agg = Profile.fusedAggregate(wp, Constraints.webtextSuite, cols, Stats.Distinct.Checked)
+    val fused = dump(Stats.statRows(agg, cols, Stats.Distinct.Checked))
+    val solo = dump(Stats.columnStats(wp, cols, Stats.Distinct.Checked))
     assert(fused._1 == solo._1, "schema drift between fused and solo checked stats")
     assert(fused._2 == solo._2, "row drift between fused and solo checked stats")
     assert(fused._2.nonEmpty)

@@ -19,7 +19,7 @@ class StatsDriftSpec extends SparkSpecBase {
     val df = Seq(
       (0, Some("b")), (0, Some("a")), (0, None), (0, Some("a")),
       (1, Some("z"))).toDF("part", "v")
-    val got = Stats.columnStats(df, Seq("v"), exact = true)
+    val got = Stats.columnStats(df, Seq("v"), Stats.Distinct.Exact)
       .collect().map(r => r.getInt(0) ->
         ((r.getDouble(2), r.getLong(3), r.getString(4), r.getString(5), r.getLong(6)))).toMap
     assert(got(0) == ((0.25, 2L, "a", "b", 4L)))

@@ -19,8 +19,7 @@ class StreamMutateSpec extends SparkSpecBase {
       .violations(pages, Constraints.webtextSuite, Seq("doc_id"))
       .collect().map(_.mkString("|")).sorted
 
-    val stream = StreamingValidation.violationStream(
-      StreamingValidation.pagesStream(spark, dir, pages.schema),
+    val stream = graft.runner.Runner.violations(spark.readStream.schema(pages.schema).parquet(dir),
       Constraints.webtextSuite, Seq("doc_id"))
     assert(stream.isStreaming)
     val q = stream.writeStream.format("memory").queryName("viol_stream")
@@ -52,7 +51,7 @@ class StreamMutateSpec extends SparkSpecBase {
     pages.write.mode("overwrite").parquet(dir)
     val batchTotal = graft.runner.Runner
       .violations(pages, Constraints.webtextSuite, Seq("warc_ts")).count()
-    val src = StreamingValidation.pagesStream(spark, dir, pages.schema)
+    val src = spark.readStream.schema(pages.schema).parquet(dir)
     val qw = StreamingValidation.windowedViolationCounts(src, Constraints.webtextSuite)
       .writeStream.format("memory").queryName("viol_windowed")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
